@@ -76,10 +76,10 @@ object Bench {
     // a CONSTANT factor — so the design claim on record is ~linear.
     "dq_profile")
 
-  /** Probes whose first run against a fresh dir pays a one-time
-    * fingerprint-cached sidecar build — they get an extra UNTIMED
-    * warmup run on the synth dir before the shared min-of-3, so the
-    * build never enters the recorded slope. */
+  /** Probes whose first run against a fresh dir pays a once-per-JVM
+    * sidecar build — they get an extra UNTIMED warmup run on the synth
+    * dir before the shared min-of-3, so the build never enters the
+    * recorded slope. */
   private val sidecarBuilders = Set("layout_zorder_box", "search_index_topk")
 
   private def probeFilter: String => Boolean = {
@@ -170,14 +170,13 @@ object Bench {
     // was single-sampled — exactly the statistic the r11 fix gave the
     // denominators — so one GC/IO hiccup on a multi-second probe wrote
     // a 2-3x-inflated slope straight into the record). Sidecar
-    // builders pay their one-time fingerprint-cached build in an
-    // UNTIMED warmup run first, so the build never enters any repeat.
+    // builders pay their once-per-JVM build in an UNTIMED warmup run
+    // first, so the build never enters any repeat.
     val synth: Map[String, Double] =
       if (tenx.isEmpty || sys.env.get("SPARK_GRAFT_SLOPE100").contains("0"))
         Map.empty
       else try {
-        val synthDir = java.nio.file.Files
-          .createTempDirectory("graft_synth10x").toString
+        val synthDir = Scratch.fresh("graft_synth10x")
         synthScale(spark, sfDir, synthDir, 10)
         // SETTLE before the first timed probe (r14 judge ask #1a): the
         // scale-up just wrote ~10x sf of dirty pages, and whichever
@@ -525,7 +524,7 @@ object Bench {
     * the r13 drift map because the table said 2.1 s while its history
     * said ~0.3-1.3 s. A LOW quantile (not the min): history records are
     * full-suite values, so most carry per-query codegen and whatever
-    * one-time sidecar builds the round's /tmp state charged — the p25
+    * one-time sidecar builds the round's JVM charged — the p25
     * keeps the guard at "an honest quiet run", not "the luckiest run
     * ever". Needs >= `minRecords` values, else the statistic is one
     * round's mood. Only the most RECENT `window` values participate
@@ -842,8 +841,7 @@ object Bench {
       } else first
     }
     val (servingMs, servingWarmMs): (Double, Double) = try {
-      val goldDir = java.nio.file.Files.createTempDirectory("graft_gold")
-        .toString + "/agg"
+      val goldDir = Scratch.fresh("graft_gold") + "/agg"
       graft.etl.GoldAggregates.materialize(spark, sfDir, goldDir)
       val slices = spark.read.parquet(goldDir)
         .select("state", "year_month").distinct().limit(21).collect()
@@ -893,8 +891,7 @@ object Bench {
     // never a fact rescan. Materialization is untimed (it is the
     // refresh path, measured by the suite's build queries).
     val sketchMs: Double = try {
-      val base = java.nio.file.Files.createTempDirectory("graft_sketch")
-        .toString
+      val base = Scratch.fresh("graft_sketch")
       graft.etl.GoldAggregates.materializeDistinctSketch(spark, sfDir,
         s"$base/sk")
       graft.etl.GoldAggregates.materializeRateHistogram(spark, sfDir,
@@ -1157,15 +1154,15 @@ object Bench {
 
   private val referenceSec: Map[String, Double] = Map(
     // (r11) layout family: the *_lookup/_append entries carry their
-    // one-time fingerprint-cached sidecar build (first run per /tmp
-    // lifetime); probes alone are sub-second (box 0.34, secondary 0.41)
+    // once-per-JVM sidecar build; probes alone are sub-second (box
+    // 0.34, secondary 0.41)
     "layout_bloom_lookup" -> 2.0,
     "layout_zorder_append" -> 2.4,
     "layout_zorder_asof" -> 2.4, // shares the append sidecar's one-time build
     "star_fact_zorder" -> 3.0, // (r12) one-time z-fact sidecar build; probe alone sub-second
     "star_fact_zorder_multi" -> 2.0, // (r12) shares the z-fact sidecar; two-leaf probe
     // (r12) alphabetically first of the z-fact family, so it pays the
-    // one-time sidecar build in a fresh /tmp; probe alone ~0.5 s
+    // once-per-JVM sidecar build; probe alone ~0.5 s
     "star_fact_uid_lookup" -> 3.0,
     "sample_cluster_balanced" -> 1.6, // (r12) kmeans sample scan + assign + keyed window
     "j15_salted_skew" -> 2.1, // shuffle-hash join by design (no broadcast)

@@ -117,13 +117,6 @@ object NormExprs {
     when(members.isNull || size(members) === 0, md5(lit("none")))
       .otherwise(md5(concat_ws("|", members)))
 
-  /** Notebook variant: drops "n"/"u"/"l" artifacts, ","-joined, no
-    * "none" sentinel (prod_etl/notebook.py:100-111). */
-  def posSetIdV2(members: Column): Column =
-    md5(concat_ws(",", array_sort(filter(coalesce(members,
-      array().cast("array<string>")),
-      v => length(trim(v)) > 0 && !lower(v).isin("n", "u", "l")))))
-
   /** pg_uid = md5(payer_slug|version|group_id|provider_reference_id)
     * (prod_etl/ETL_1.py:168-171). */
   def pgUid(payerSlug: Column, version: Column, pgid: Column, pref: Column): Column =

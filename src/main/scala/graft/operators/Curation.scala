@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.NormExprs.pround
 import graft.queries.QueryPack
 
@@ -338,8 +338,7 @@ object Curation extends QueryPack {
     * it assigned under, the oracle re-derives the assignment from the
     * same frame. */
   private val oracleClusterCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_cluster_balance_centroids").getAbsolutePath
+    Scratch.path("graft_cluster_balance_centroids")
 
   def queries: Map[String, QFn] = Map(
     // k-anonymity audit — the release gate next to PII scrubbing: can

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.NormExprs.pround
 import graft.queries.QueryPack
 
@@ -1032,16 +1032,14 @@ object Dedup extends QueryPack {
     * overwrites it with the centroids it scored, the DuckDB twin reads
     * it back, so both engines assign under identical fp32 centroids. */
   val oracleSemanticCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_semantic_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_semantic_oracle_centroids")
 
   /** Query-private sidecar for `dedup_semantic_incremental` — contents
     * coincide with [[oracleSemanticCentroidSidecar]] today (same
     * deterministic derivation over the same corpus), but no declared
     * query's oracle may depend on another query's overwrite schedule. */
   val oracleSemanticIncCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_semantic_inc_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_semantic_inc_oracle_centroids")
 
   /** Shared DuckDB CTE: cleaned word tokens of the augmented corpus —
     * the SQL twin of [[tokens]] over [[augmentedSql]]. */

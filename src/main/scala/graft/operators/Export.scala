@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.queries.QueryPack
 
 /** Deterministic sharded training export — the step that turns a
@@ -168,17 +168,11 @@ object Export extends QueryPack {
       .option("compression", "zstd")
       .parquet(outPath)
 
-  /** Drive [[processBatchExport]] from a streaming frame. */
-  def runExportStream(docs: DataFrame, idCol: String, outPath: String,
-                      checkpoint: String, nShards: Int = NShards,
-                      seed: String = Seed)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatchExport(b, id, idCol, outPath, nShards, seed)
-      }
-      .start()
+  /** `lineage_shard_audit`'s export dir for source dir `d`: one per
+    * source dir, so audits of two SF dirs in one JVM never share it. */
+  def lineageDir(d: String): String = Scratch.path("graft_lineage_" +
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12))
 
   def queries: Map[String, QFn] = Map(
     // Per-shard membership, volume, and an order fingerprint: md5 over
@@ -214,9 +208,7 @@ object Export extends QueryPack {
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"), col("source"), col("lang"),
           col("n_chars"))
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_lineage_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+      val out = lineageDir(d)
       exportShards(docs, "doc_id", out)
       s.read.parquet(out)
         .withColumn("__file", input_file_name())

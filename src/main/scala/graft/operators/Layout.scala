@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{FsUtils, Tables}
+import graft.{FsUtils, Scratch, Tables}
 import graft.queries.QueryPack
 
 /** Data-layout operators for scan-side IO elimination — the knobs a
@@ -100,17 +100,35 @@ object Layout extends QueryPack {
     }
 
   /** Cluster `df` by the Morton order of the boundary map and write
-    * into `dir` (one range shuffle on the z-value, a task-local sort
-    * to tighten per-row-group stats, the z-column dropped before the
-    * write). Returns nothing; the caller owns manifest publication. */
+    * into `dir` (one shuffle on the z-value, a task-local sort to
+    * tighten per-row-group stats, the z-column dropped before the
+    * write). Returns nothing; the caller owns manifest publication.
+    *
+    * The file cut points are EXACT equi-depth z-values from one
+    * per-cell count (≤ 2^(cols·bits) rows collected), not
+    * `repartitionByRange`'s sampled bounds, which are seeded by the
+    * RDD id: with those, the file split (and so the zone map) would
+    * depend on how many RDDs the JVM had made before. */
   private def writeClustered(df: DataFrame, bMap: Seq[(String, Seq[Double])],
                              dir: String, nFiles: Int, bits: Int,
-                             mode: String): Unit =
-    df.withColumn("__z", zValue(bucketsFromBoundaries(bMap), bits))
-      .repartitionByRange(nFiles, col("__z"))
+                             mode: String): Unit = {
+    val zdf = df.withColumn("__z", zValue(bucketsFromBoundaries(bMap), bits))
+    val cells = zdf.groupBy("__z").count().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val total = cells.map(_._2).sum
+    val before = cells.map(_._2).scanLeft(0L)(_ + _)
+    // cut i opens at the first cell with >= i/nFiles of the rows before it
+    val cuts = (1 until nFiles).flatMap { i =>
+      cells.indices.find(j => before(j) * nFiles >= total * i)
+        .map(j => cells(j)._1)
+    }.distinct
+    val fileId = size(filter(array(cuts.map(lit(_)): _*),
+      c => col("__z") >= c))
+    zdf.repartitionById(nFiles, fileId)
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode(mode).parquet(dir)
+  }
 
   /** Zone-map rows (per-file min/max of each layout column) for the
     * given data files. */
@@ -790,66 +808,36 @@ object Layout extends QueryPack {
 
   // ----------------------------------------------------------- fixtures
 
-  /** Query-private z-ordered lineitem layout (the [[Similarity]]
-    * fixed-sidecar convention: `oracleSql` is static, and verify is
-    * single-process last-write-wins). Cached across runs on a
-    * (source listing, params) fingerprint written LAST, so a crashed
-    * build is rebuilt, never trusted. */
-  val zorderSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_zorder_lineitem").getAbsolutePath
+  /** Query-private z-ordered lineitem layout, built once per JVM per
+    * lineitem listing ([[Scratch.once]]). */
+  val zorderSidecar: String = Scratch.path("graft_zorder_lineitem")
 
   val ZCols = Seq("l_suppkey", "l_partkey")
 
-  private def layoutFingerprint(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val listing = fs.listStatus(p).map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(";")
-    // v3: the bloom manifest went generational in r12 — a v2-era
-    // cached sidecar carries the old single-shot bloom layout
-    val key = s"$d|${ZCols.mkString(",")}|$ZBits|bloom:l_orderkey|v3|$listing"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-      .map(b => "%02x".format(b & 0xff)).mkString
-  }
-
-  /** Build the layout + both manifests unless an identical build is
-    * already present. */
+  /** Build the layout + both manifests. */
   private def ensureZorderSidecar(s: SparkSession, d: String): Unit =
-    this.synchronized {
-      val fpPath = s"$zorderSidecar/_fingerprint"
-      val fp = layoutFingerprint(s, d)
-      if (FsUtils.readString(s, fpPath).contains(fp)) return
+    Scratch.once(s, "graft_zorder_lineitem", Seq(s"$d/lineitem.parquet")) {
       zorderWrite(s, Tables.load(s, d, "lineitem"), ZCols, zorderSidecar)
       writeBloomManifest(s, zorderSidecar, "l_orderkey")
-      FsUtils.writeString(s, fpPath, fp)
     }
 
   /** Query-private layout for the APPEND path — base rows clustered
     * first, the rest arriving as a delta under the persisted
     * boundaries. Separate dir from [[zorderSidecar]] so neither
     * query's cache schedule can disturb the other. */
-  val zorderAppendSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_zorder_append").getAbsolutePath
+  val zorderAppendSidecar: String = Scratch.path("graft_zorder_append")
 
   /** Base/delta split: l_orderkey is dense from 0 at every SF, so
     * both sides are non-empty at sf0.001 and up. */
   private val AppendSplit = 700L
 
   private def ensureAppendSidecar(s: SparkSession, d: String): Unit =
-    this.synchronized {
-      val fpPath = s"$zorderAppendSidecar/_fingerprint"
-      val fp = layoutFingerprint(s, d) + "|append_v1"
-      if (FsUtils.readString(s, fpPath).contains(fp)) return
+    Scratch.once(s, "graft_zorder_append", Seq(s"$d/lineitem.parquet")) {
       val li = Tables.load(s, d, "lineitem")
       zorderWrite(s, li.filter(col("l_orderkey") < AppendSplit), ZCols,
         zorderAppendSidecar)
       appendZorder(s, li.filter(col("l_orderkey") >= AppendSplit),
         zorderAppendSidecar)
-      FsUtils.writeString(s, fpPath, fp)
     }
 
   private val ProbeCols =

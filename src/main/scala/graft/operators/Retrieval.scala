@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.NormExprs.pround
 import graft.queries.QueryPack
 import graft.streaming.DedupStream
@@ -325,12 +325,6 @@ object Retrieval extends QueryPack {
       protectGen = protectGen, maxPartials = maxPartials,
       maxSentinels = maxSentinels)
 
-  /** Committed generation ids: the stats rows ARE the commit markers.
-    * Slim — one row per live generation, bounded by compaction. */
-  private[graft] def committedGenIds(spark: SparkSession,
-                                     dir: String): Array[Long] =
-    GenStore.committedIds(spark, s"$dir/stats")
-
   /** The scorable postings frame: EXACTLY the generations with a
     * stats marker — appends and compaction folds alike commit by
     * writing that marker last, so at every intermediate state of
@@ -558,17 +552,15 @@ object Retrieval extends QueryPack {
   /** Query-private index dir (the PQ/IVF sidecar convention: the
     * declared queries overwrite it, so the probes and the oracles
     * always see the index the build just wrote). */
-  val oracleIndexDir: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_text_index_oracle").getAbsolutePath
+  val oracleIndexDir: String = Scratch.path("graft_text_index_oracle")
 
   /** Fresh build of the query-private throwaway index (r16): the
     * declared queries rebuild [[oracleIndexDir]] EVERY run, and once
-    * the dir existed (any prior run in the same /tmp lifetime) each
-    * build took the rebuild-IN-PLACE path — generation allocation,
-    * dynamic partition overwrite, the two-rename stats swap, and an
-    * old-generation GC sweep, all FS-metadata work the throwaway
-    * build doesn't need. Dropping the dir first keeps every run on the
+    * an earlier query in the JVM has built it, a build would take the
+    * rebuild-IN-PLACE path — generation allocation, dynamic partition
+    * overwrite, the two-rename stats swap, and an old-generation GC
+    * sweep, all FS-metadata work the throwaway build doesn't need.
+    * Dropping the dir first keeps every run on the
     * fresh gen-0 static-overwrite path: same postings, same stats,
     * same probe answers (RetrievalSpec separately pins the
     * rebuild-in-place protocol, which long-lived indexes still use). */

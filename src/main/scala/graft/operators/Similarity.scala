@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.NormExprs.pround
 import graft.queries.QueryPack
 
@@ -179,7 +179,7 @@ object Similarity extends QueryPack {
     }),
 
     // IVF-bucketed approximate top-k (k-means centroids, K=8, nprobe=2).
-    // The centroid frame is persisted to a fixed sidecar path before the
+    // The centroid frame is persisted to a scratch sidecar path before the
     // query plan is returned: IVF is only cross-engine checkable if both
     // engines score against the SAME centroids, so the DuckDB oracle
     // reads this sidecar instead of re-deriving k-means (whose fp drift
@@ -351,11 +351,10 @@ object Similarity extends QueryPack {
     // M-byte codes, with raw vectors read back only for the per-vector
     // shortlist's exact cosine re-rank. Sidecar trio persisted so the
     // DuckDB twin replays assignment, probing, LUT, ADC shortlist and
-    // re-rank over the identical quantization; the trio is
-    // fingerprint-cached across runs (the zorderSidecar convention —
-    // all three derivations are deterministic functions of the
-    // embeddings listing, and the 1024-step encode expression is the
-    // query's dominant cold cost).
+    // re-rank over the identical quantization; the trio is built once
+    // per JVM ([[Scratch.once]] — all three derivations are
+    // deterministic functions of the embeddings listing, and the
+    // 1024-step encode expression is the query's dominant cold cost).
     "sim_knn_graph_pq" -> ((s, d) => {
       ensureKnnPqSidecars(s, d)
       knnGraphPq(emb(s, d),
@@ -1540,95 +1539,61 @@ object Similarity extends QueryPack {
     * overwrites them with the codebook and codes it actually scored,
     * and the DuckDB twin reads them back, so both engines rank the
     * SAME quantization. */
-  val oraclePqCodebookSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_pq_oracle_codebook").getAbsolutePath
-  val oraclePqCodesSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_pq_oracle_codes").getAbsolutePath
+  val oraclePqCodebookSidecar: String = Scratch.path("graft_pq_oracle_codebook")
+  val oraclePqCodesSidecar: String = Scratch.path("graft_pq_oracle_codes")
 
   /** `sim_ivfpq_topk`'s own sidecar trio — query-private even though
     * the contents coincide with the IVF/PQ queries' sidecars today
     * (all three derivations are deterministic), so no declared query's
     * oracle can be poisoned by another query's overwrite schedule. */
   val oracleIvfPqCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_ivfpq_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_ivfpq_oracle_centroids")
   val oracleIvfPqCodebookSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_ivfpq_oracle_codebook").getAbsolutePath
-  val oracleIvfPqCodesSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_ivfpq_oracle_codes").getAbsolutePath
+    Scratch.path("graft_ivfpq_oracle_codebook")
+  val oracleIvfPqCodesSidecar: String = Scratch.path("graft_ivfpq_oracle_codes")
 
   /** Fixture sidecar for the `sim_ivf_topk` cross-engine oracle: the
     * declared query overwrites it with the centroids it actually used,
     * and the DuckDB twin reads it back (`read_parquet`), so both
-    * engines bucket and probe under identical fp32 centroids. Fixed
-    * path by necessity — `oracleSql` is a static map, so the SQL cannot
-    * interpolate a per-run location. The verify flow is single-process
-    * (queries run, then DuckDB reads), so last-write-wins is safe; the
-    * Spark plan itself scores against the in-memory frame and is
-    * unaffected by concurrent rewrites of the sidecar. */
-  val oracleCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_ivf_oracle_centroids").getAbsolutePath
+    * engines bucket and probe under identical fp32 centroids. The
+    * path lives under the JVM's [[Scratch.root]], which `oracleSql`
+    * interpolates too; the Spark plan itself scores against the
+    * in-memory frame. */
+  val oracleCentroidSidecar: String = Scratch.path("graft_ivf_oracle_centroids")
 
   /** Query-private sidecar for `sim_ivf_filtered` (same contract). */
   val oracleFilteredCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_ivf_filtered_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_ivf_filtered_oracle_centroids")
 
   /** Bottom-K size and query-private sidecar for `embedding_outliers`
     * (no declared query's oracle may depend on another query's
     * overwrite schedule). */
   val OutlierK = 25
   val oracleOutlierCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_outlier_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_outlier_oracle_centroids")
 
   /** Query-private centroid sidecars for `sim_knn_graph` /
     * `sim_knn_classify` (same contract as [[oracleCentroidSidecar]]:
     * the declared query overwrites, the DuckDB twin reads back). */
   val oracleKnnGraphCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_knn_graph_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_knn_graph_oracle_centroids")
   val oracleKnnClassifyCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_knn_classify_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_knn_classify_oracle_centroids")
 
   /** `sim_knn_graph_pq`'s sidecar trio (centroids + codebook + coded
     * rows with their stored bucket) — query-private, same
     * overwrite/read-back contract as the IVFPQ trio. */
   val oracleKnnGraphPqCentroidSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_knn_pq_oracle_centroids").getAbsolutePath
+    Scratch.path("graft_knn_pq_oracle_centroids")
   val oracleKnnGraphPqCodebookSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_knn_pq_oracle_codebook").getAbsolutePath
+    Scratch.path("graft_knn_pq_oracle_codebook")
   val oracleKnnGraphPqCodesSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_knn_pq_oracle_codes").getAbsolutePath
+    Scratch.path("graft_knn_pq_oracle_codes")
 
-  /** Build the sim_knn_graph_pq sidecar trio unless an identical build
-    * is already present — fingerprint over the embeddings listing +
-    * the PQ/IVF parameters, marker written LAST so a crashed build is
-    * rebuilt, never trusted. */
+  /** Build the sim_knn_graph_pq sidecar trio once per JVM per
+    * embeddings listing. */
   private def ensureKnnPqSidecars(s: SparkSession, d: String): Unit =
-    this.synchronized {
-      val fpPath = s"$oracleKnnGraphPqCodesSidecar/_fingerprint"
-      val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      val listing = fs.listStatus(p).map(st =>
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(";")
-      val fp = {
-        val key = s"$d|knnpq_v1|M$PqM|K$PqK|$listing"
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(key.getBytes("UTF-8"))
-          .map(b => "%02x".format(b & 0xff)).mkString
-      }
-      if (graft.FsUtils.readString(s, fpPath).contains(fp)) return
+    Scratch.once(s, "graft_knn_pq_oracle", Seq(s"$d/embeddings.parquet")) {
       val e = emb(s, d)
       // one shared sample scan for both k-means derivations (r17 —
       // the sim_ivfpq_topk rationale)
@@ -1650,7 +1615,6 @@ object Similarity extends QueryPack {
         .parquet(oracleKnnGraphPqCodebookSidecar)
       coded.repartition(1).write.mode("overwrite")
         .parquet(oracleKnnGraphPqCodesSidecar)
-      graft.FsUtils.writeString(s, fpPath, fp)
     }
 
   /** Shared SQL: per-(pair) double-precision dot products via UNNEST. */

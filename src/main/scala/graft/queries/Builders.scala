@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Roles, RolesSql, Tables}
+import graft.{Roles, RolesSql, Scratch, Tables}
 import graft.etl.{EnrichmentDims, EnrichmentDimsSql, GoldAggregates, WideTableBuilder}
 import graft.functions.{Categorizer, NormExprs}
 import graft.functions.NormExprs.{pround, wageAdjFactor}
@@ -76,66 +76,44 @@ object Builders extends QueryPack {
     * the declared query overwrites it, the oracle reads the same
     * files, so both engines filter the same hive layout). */
   private val oracleFactDir: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fact_multiselect_oracle").getAbsolutePath
+    Scratch.path("graft_fact_multiselect_oracle")
 
   /** The gold sidecar's six-state slice. */
   private val MsSliceStates = Seq("NATION_1", "NATION_3", "NATION_7",
     "NATION_9", "NATION_12", "NATION_20")
 
-  /** Cache key for the sidecar: the source dir, the slice definition,
-    * and the source tables' top-level listing (name/size/mtime — the
-    * fact derives from these files, so regenerated testdata misses the
-    * cache). Materializing the slice is build work the QUERY semantics
-    * don't need repeated — a real deployment builds the gold fact once
-    * — so a repeat run against unchanged inputs must pay probe cost
-    * only. */
-  private def factSliceFingerprint(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val listing = fs.listStatus(p).map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(";")
-    val key = s"$d|1995-09|${MsSliceStates.mkString(",")}|v1|$listing"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-      .map(b => "%02x".format(b & 0xff)).mkString
-  }
-
-  /** Materialize the sidecar slice unless an identical build is
-    * already present (fingerprint marker written LAST, so a crashed
-    * build is rebuilt, never trusted). */
-  private def ensureFactSidecar(s: SparkSession, d: String): Unit = {
-    val fpPath = s"$oracleFactDir/_fingerprint"
-    val fp = factSliceFingerprint(s, d)
-    if (graft.FsUtils.readString(s, fpPath).contains(fp)) return
-    // repartition by state: each writer task owns ONE state subtree
-    // (~20 leaves), so the 5-level dynamic write creates one file
-    // per leaf instead of fanning 32 shuffle partitions × ~500
-    // leaves into thousands of tiny files (the small-file problem
-    // compactPartitions exists to undo — don't create it here)
-    // slice BEFORE fact(): its fact_uid dedup is an aggregate whose
-    // non-key columns come back as first() outputs, so a filter
-    // placed above it cannot push through — filtering the base
-    // keeps the md5 minting and the dedup shuffle slice-sized. Six
-    // states (a superset of the two queried) keep the multi-state
-    // listing-prune demonstrable while bounding the per-run leaf
-    // fan-out of the 5-level write. STATIC overwrite on purpose —
-    // the production sink's dynamic-overwrite semantics
-    // (writePartitionedFact) would leave residue partitions behind
-    // when consecutive runs use different SF dirs, and a
-    // query-private sidecar must be exactly what this run wrote.
-    graft.etl.StarSchemaBuilder.fact(
-        graft.etl.StarSchemaBuilder.base(s, d)
-          .filter(col("year_month") === "1995-09" &&
-            col("state").isin(MsSliceStates.map(lit(_)): _*)))
-      .repartition(col("state"))
-      .write.mode("overwrite")
-      .partitionBy(graft.etl.StarSchemaBuilder.FactPartitionCols: _*)
-      .option("compression", "zstd")
-      .parquet(oracleFactDir)
-    graft.FsUtils.writeString(s, fpPath, fp)
-  }
+  /** Materialize the sidecar slice once per JVM per source-dir
+    * listing: the fact derives from these files, and materializing the
+    * slice is build work the QUERY semantics don't need repeated — a
+    * real deployment builds the gold fact once. */
+  private def ensureFactSidecar(s: SparkSession, d: String): Unit =
+    Scratch.once(s, "graft_fact_multiselect_oracle", Seq(d)) {
+      // repartition by state: each writer task owns ONE state subtree
+      // (~20 leaves), so the 5-level dynamic write creates one file
+      // per leaf instead of fanning 32 shuffle partitions × ~500
+      // leaves into thousands of tiny files (the small-file problem
+      // compactPartitions exists to undo — don't create it here)
+      // slice BEFORE fact(): its fact_uid dedup is an aggregate whose
+      // non-key columns come back as first() outputs, so a filter
+      // placed above it cannot push through — filtering the base
+      // keeps the md5 minting and the dedup shuffle slice-sized. Six
+      // states (a superset of the two queried) keep the multi-state
+      // listing-prune demonstrable while bounding the per-run leaf
+      // fan-out of the 5-level write. STATIC overwrite on purpose —
+      // the production sink's dynamic-overwrite semantics
+      // (writePartitionedFact) would leave residue partitions behind
+      // when consecutive runs use different SF dirs, and a
+      // query-private sidecar must be exactly what this run wrote.
+      graft.etl.StarSchemaBuilder.fact(
+          graft.etl.StarSchemaBuilder.base(s, d)
+            .filter(col("year_month") === "1995-09" &&
+              col("state").isin(MsSliceStates.map(lit(_)): _*)))
+        .repartition(col("state"))
+        .write.mode("overwrite")
+        .partitionBy(graft.etl.StarSchemaBuilder.FactPartitionCols: _*)
+        .option("compression", "zstd")
+        .parquet(oracleFactDir)
+    }
 
   /** Query-private z-ordered hive-fact sidecar for `star_fact_zorder`:
     * the production composition — hive levels prune the mandatory
@@ -143,9 +121,7 @@ object Builders extends QueryPack {
     * files for the code/rate drill-downs the levels can't cover
     * (webapp/staged_dashboard.py:95-310). Two states keep the leaf
     * walk non-trivial while bounding the build. */
-  private val zfactDir: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fact_zorder").getAbsolutePath
+  private val zfactDir: String = Scratch.path("graft_fact_zorder")
   /** Both states carry suppliers at EVERY SF dir (sf0.001's supplier
     * table covers only 10 nations) — the probe reads a leaf PATH, so
     * an absent state would be PATH_NOT_FOUND, not an empty result. */
@@ -154,24 +130,8 @@ object Builders extends QueryPack {
   private val ZfCodeBox = (40L, 120L)
   private val ZfRateBox = (10000L, 40000L)
 
-  private def zfactFingerprint(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val listing = fs.listStatus(p).map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(";")
-    // v2: + per-leaf fact_uid bloom manifest (string keys)
-    val key = s"$d|${ZfStates.mkString(",")}|zfact_v2|$listing"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-      .map(b => "%02x".format(b & 0xff)).mkString
-  }
-
   private def ensureZfactSidecar(s: SparkSession, d: String): Unit =
-    this.synchronized {
-      val fpPath = s"$zfactDir/_fingerprint"
-      val fp = zfactFingerprint(s, d)
-      if (graft.FsUtils.readString(s, fpPath).contains(fp)) return
+    Scratch.once(s, "graft_fact_zorder", Seq(d)) {
       // code_num: the probe needs a NUMERIC envelope — min/max of the
       // string `code` would be lexicographic and range-probing it
       // would lose rows
@@ -190,7 +150,6 @@ object Builders extends QueryPack {
       graft.operators.Layout.writeBloomManifest(s,
         s"$zfactDir/state=$ZfProbeState", "fact_uid",
         estItems = 100000L, numBits = 1L << 20)
-      graft.FsUtils.writeString(s, fpPath, fp)
     }
 
   def queries: Map[String, QFn] = Map(
@@ -276,8 +235,8 @@ object Builders extends QueryPack {
       // deployment materializes the whole fact once, but a per-run
       // sidecar rebuild must not pay the full-fact small-file fan-out
       // (5 hive levels × every month ≈ thousands of leaf writes).
-      // Cached across runs on a (source dir, slice, input listing)
-      // fingerprint: unchanged inputs rerun at probe cost only.
+      // Built once per JVM per input listing: a rerun against
+      // unchanged inputs pays probe cost only.
       ensureFactSidecar(s, d)
       val fact = s.read.parquet(oracleFactDir)
         .withColumnRenamed("code", "billing_code")
@@ -431,9 +390,7 @@ object Builders extends QueryPack {
     // first-principles oracle proves migrate-then-repair ≡ building
     // the flags fresh.
     "dim_evolve_migrate" -> ((s, d) => {
-      val legacyDir = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft_dim_migrate_oracle").getAbsolutePath
+      val legacyDir = Scratch.path("graft_dim_migrate_oracle")
       val dim = EnrichmentDims.dimNpi(Roles.providers(s, d))
       val keyFields = Set("status", "organization_name", "first_name",
         "last_name", "primary_taxonomy_code")

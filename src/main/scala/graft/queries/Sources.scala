@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Roles, RolesSql, Tables}
+import graft.{Roles, RolesSql, Scratch, Tables}
 import graft.etl.EnrichmentDims
 import graft.functions.NormExprs.pround
 
@@ -102,10 +102,11 @@ object Sources extends QueryPack {
         .select(col("s_suppkey").cast("string").as("npi"),
           col("j.basic.status").as("status"),
           col("j.basic.organization_name").as("org_name"),
+          // try_element_at: NULL on an empty array under ANSI too
           coalesce(
-            element_at(filter(col("j.taxonomies"),
-              t => t.getField("primary")), 1).getField("code"),
-            element_at(col("j.taxonomies"), 1).getField("code"))
+            try_element_at(filter(col("j.taxonomies"),
+              t => t.getField("primary")), lit(1)).getField("code"),
+            try_element_at(col("j.taxonomies"), lit(1)).getField("code"))
             .as("primary_taxonomy_code"))
     }),
 
@@ -244,26 +245,18 @@ object Sources extends QueryPack {
 
   /** Sidecar dir for the CSV roundtrip (same contract as
     * [[oracleJsonlSidecar]]). */
-  val oracleCsvSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_csv_oracle").getAbsolutePath
+  val oracleCsvSidecar: String = Scratch.path("graft_csv_oracle")
 
   /** Sidecar dir for the xlsx roundtrip workbook. */
-  val oracleXlsxSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_xlsx_oracle").getAbsolutePath
+  val oracleXlsxSidecar: String = Scratch.path("graft_xlsx_oracle")
 
   /** Sidecar dir for the ORC roundtrip. */
-  val oracleOrcSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_orc_oracle").getAbsolutePath
+  val oracleOrcSidecar: String = Scratch.path("graft_orc_oracle")
 
-  /** Sidecar dir for the JSONL roundtrip (the fixed-path-by-necessity
-    * contract documented at [[graft.operators.Similarity
+  /** Sidecar dir for the JSONL roundtrip (the read-back contract
+    * documented at [[graft.operators.Similarity
     * .oracleCentroidSidecar]]). */
-  val oracleJsonlSidecar: String =
-    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_jsonl_oracle").getAbsolutePath
+  val oracleJsonlSidecar: String = Scratch.path("graft_jsonl_oracle")
 
   def oracles: Map[String, String] = Map(
     "s6_sheet_union" -> """

@@ -211,8 +211,7 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
       * from the EXACT shared aggregate definitions, so the fast path
       * is byte-identical to the live plan by construction. */
     lazy val goldSummary: DataFrame = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_rest_gold_summary").toString
+      val dir = graft.Scratch.fresh("graft_rest_gold_summary")
       tempDirs += dir; dirs.add(dir)
       ratesWithProviders().groupBy("state", "year_month")
         .agg(summaryAggs.head, summaryAggs.tail: _*)
@@ -222,8 +221,7 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
     }
 
     lazy val goldByPayer: DataFrame = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_rest_gold_bypayer").toString
+      val dir = graft.Scratch.fresh("graft_rest_gold_bypayer")
       tempDirs += dir; dirs.add(dir)
       ratesWithProviders().groupBy("state", "year_month", "payer_slug")
         .agg(byPayerAggs.head, byPayerAggs.tail: _*)
@@ -241,8 +239,7 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
       * clone's 8 shuffle partitions bound the shard count at
       * dashboard grain). */
     lazy val goldValues: DataFrame = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_rest_gold_values").toString
+      val dir = graft.Scratch.fresh("graft_rest_gold_values")
       tempDirs += dir; dirs.add(dir)
       val base = ratesWithProviders()
       FactAutocompleteFields.toSeq.sorted.map { field =>
@@ -1031,8 +1028,7 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
     * reads, never a corpus scan). Index construction is deterministic,
     * so a restarted server rebuilds the identical index. */
   private lazy val searchIndexDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rest_index").toString
+    val dir = graft.Scratch.fresh("graft_rest_index")
     tempDirs += dir
     graft.operators.Retrieval.writeTextIndex(
       graft.Tables.load(spark, dataDir, "documents"),
@@ -1071,8 +1067,7 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
     * bucket-pruned candidate read + topK slim rows — independent of
     * corpus size. */
   private lazy val ivfIndexDir: String = {
-    val parent = java.nio.file.Files
-      .createTempDirectory("graft_rest_ivf").toString
+    val parent = graft.Scratch.fresh("graft_rest_ivf")
     tempDirs += parent
     val dir = parent + "/ivf"
     graft.operators.Similarity.writeIvfIndex(spark, dataDir, dir)

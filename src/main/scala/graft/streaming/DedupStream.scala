@@ -484,57 +484,6 @@ object DedupStream {
     true
   }
 
-  /** Attach the banded-store incremental dedup to a document stream. */
-  def runBanded(docsStream: DataFrame, idCol: String, textCol: String,
-                storePath: String, bandsPath: String, countsPath: String,
-                pairsPath: String, checkpoint: String): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchBanded(batch, batchId, idCol, textCol, storePath,
-          bandsPath, countsPath, pairsPath)
-      }
-      .start()
-
-  /** Attach the SimHash banded dedup to a document stream. */
-  def runBandedSimhash(docsStream: DataFrame, idCol: String,
-                       textCol: String, storePath: String,
-                       bandsPath: String, countsPath: String,
-                       pairsPath: String, checkpoint: String): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchBandedSimhash(batch, batchId, idCol, textCol,
-          storePath, bandsPath, countsPath, pairsPath)
-      }
-      .start()
-
-  /** Attach the SRP-embedding banded dedup to a vector stream. */
-  def runBandedSrp(vecsStream: DataFrame, idCol: String, embCol: String,
-                   storePath: String, bandsPath: String,
-                   countsPath: String, pairsPath: String,
-                   checkpoint: String): StreamingQuery =
-    vecsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchBandedSrp(batch, batchId, idCol, embCol,
-          storePath, bandsPath, countsPath, pairsPath)
-      }
-      .start()
-
-  /** Attach the semantic (centroid-cluster) dedup to a vector stream. */
-  def runBandedSemantic(vecsStream: DataFrame, idCol: String,
-                        embCol: String, storePath: String,
-                        bandsPath: String, countsPath: String,
-                        pairsPath: String, checkpoint: String): StreamingQuery =
-    vecsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchBandedSemantic(batch, batchId, idCol, embCol,
-          storePath, bandsPath, countsPath, pairsPath)
-      }
-      .start()
-
   /** Lay the band store out BUCKETED by band_hash — the last pruning
     * step of the banded path's scale story. The plain parquet store is
     * probed by broadcast join: no shuffle, but every batch still SCANS

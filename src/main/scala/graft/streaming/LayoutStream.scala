@@ -195,16 +195,4 @@ object LayoutStream {
         treeStreamBase(spark, root).toString)
     }
   }
-
-  /** Attach hive-routed layout maintenance to a stream of fact rows. */
-  def runHive(rowsStream: DataFrame, root: String,
-              partitionCols: Seq[String], zCols: Seq[String],
-              checkpoint: String, nFiles: Int = 4): StreamingQuery =
-    rowsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchHive(batch, batchId, root, partitionCols, zCols,
-          nFiles)
-      }
-      .start()
 }

@@ -66,15 +66,4 @@ object LinkageStream {
   }
 
   def unlinkedPathOf(linksPath: String): String = linksPath + "_unlinked"
-
-  def runLinkStream(dirty: DataFrame, masterPath: String,
-                    linksPath: String, checkpoint: String,
-                    maxDist: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    dirty.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, masterPath, linksPath, maxDist)
-      }
-      .start()
 }

@@ -25,8 +25,7 @@ object RoutedProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val goldDir = java.nio.file.Files.createTempDirectory("graft_gold")
-      .toString + "/agg"
+    val goldDir = graft.Scratch.fresh("graft_gold") + "/agg"
     graft.etl.GoldAggregates.materialize(spark, sfDir, goldDir)
     val slices = graft.etl.GoldAggregates.aggMarketRates(spark, sfDir)
       .select("state", "year_month").distinct().limit(12).collect()

@@ -82,10 +82,7 @@ class ExportSpec extends SparkSpec {
     // rows keep their path-derived shard (1) but fail the membership
     // stats; the audit's n_docs/id_sum for shard 1 must now disagree
     // with the membership function (what the oracle gate would catch)
-    val tmpBase = System.getProperty("java.io.tmpdir") + "/graft_lineage_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(sf0001.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(12)
+    val tmpBase = Export.lineageDir(sf0001)
     val src = new java.io.File(s"$tmpBase/shard=0").listFiles()
       .filter(_.getName.endsWith(".parquet")).head.toPath
     val dst = java.nio.file.Paths.get(s"$tmpBase/shard=1/smuggled.parquet")

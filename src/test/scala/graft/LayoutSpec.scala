@@ -47,6 +47,21 @@ class LayoutSpec extends SparkSpec {
     assert(r.getLong(2) == 15L) // all four low z-bits
   }
 
+  test("clustered write is a function of the data, not of JVM history") {
+    // two builds of one input in one JVM run under different RDD ids;
+    // the file split (hence every zone-map envelope) must not move
+    def envelopes(): Seq[String] = {
+      val d = Scratch.fresh("layout_spec_det") + "/zl"
+      Layout.zorderWrite(spark, li, Seq("l_suppkey", "l_partkey"), d,
+        nFiles = 4)
+      spark.read.parquet(s"$d/_manifest_mm").drop("file", "gen")
+        .collect().map(_.mkString(",")).toSeq.sorted
+    }
+    val first = envelopes()
+    assert(first.size > 1)
+    assert(envelopes() == first)
+  }
+
   test("zone-pruned box probe: exact result, most files skipped") {
     val box = Seq(("l_suppkey", 2L, 4L), ("l_partkey", 40L, 120L))
     val got = Layout.zonePrunedRead(spark, dir, box)
