@@ -176,7 +176,8 @@ object GoldAggregates {
       graft.plans.GoldCatalog.invalidate(outPath)
       invalidateSlices(outPath)
       val defining = aggMarketRates(spark, dir)
-      write(defining, outPath)
+      writeClustered(defining, outPath, Seq("state", "year_month"),
+        dynamic = true)
       invalidateSlices(outPath) // drop frames cached mid-overwrite
       graft.plans.GoldCatalog.register(defining, outPath)
       writeMeta(spark, dir, outPath, defining)
@@ -294,23 +295,59 @@ object GoldAggregates {
         (col("state") <=> lit(st)) && (col("year_month") <=> lit(ym))
       }.reduce(_ || _)
       invalidateSlices(outPath)
-      write(agg.filter(hit), outPath)
+      writeClustered(agg.filter(hit), outPath, Seq("state", "year_month"),
+        dynamic = true, maxLeaves = slices.distinct.size)
       invalidateSlices(outPath) // drop frames cached mid-overwrite
       if (wasRegistered) graft.plans.GoldCatalog.register(agg, outPath)
     }
 
-  private def write(df: DataFrame, outPath: String): Unit =
-    // Cluster rows by the partition columns before the partitioned
-    // write: without this every one of the N shuffle partitions opens a
-    // writer in every touched leaf dir → up to N small files per slice
-    // (tens of thousands of files at 2 100 slices), and every serving
-    // read pays the listing. With it each leaf holds one file.
-    df.repartition(col("state"), col("year_month"))
+  /** The one clustered-write recipe of the gold table and its sketch
+    * sidecars: hash rows on the partition columns into exactly
+    * `spark.sql.shuffle.partitions` writer tasks, then write
+    * hive-partitioned by those columns. Clustering first, because
+    * without it every shuffle partition opens a writer in every leaf
+    * dir it touches → up to N small files per leaf (tens of thousands
+    * of files at 2 100 slices), and every serving read pays the
+    * listing. Hashed on the partition columns, each leaf's rows land
+    * in one task, so each leaf holds one file.
+    *
+    * The count is explicit because AQE coalesces a count-less
+    * `repartition(cols)` of this small shuffle (kilobytes per slice)
+    * into ONE partition, and that one task then pays the fixed
+    * per-file cost (writer open, footer, permissions, commit rename;
+    * ~15 ms) of every leaf one after another while the other cores
+    * idle — most of a gold build at ~900 slices. AQE never coalesces an
+    * explicit-count repartition, so the leaves spread over all the
+    * session's shuffle partitions and still hold one file each.
+    *
+    * A refresh rewrites a few known leaves and passes their count as
+    * `maxLeaves`, which caps the task count: tasks beyond the leaf
+    * count get no rows, yet each still pays its scheduling and commit
+    * overhead — at Spark's default 200 shuffle partitions that tripled
+    * a one-slice ServingRefresh batch.
+    *
+    * `dynamic = true` (the gold writes and the sketch refresh leg)
+    * overwrites only the partitions present in `df` — the sketch
+    * refresh pre-drops vanished states (see [[refreshSketchSlices]]'s
+    * dropStateDirs). `dynamic = false` (the full sketch materialize
+    * leg, clustered on `state`; layout rationale at
+    * [[materializeDistinctSketch]]) STATIC-overwrites the whole path,
+    * so a state that vanished from the base since the last
+    * materialize cannot leave a stale partition dir behind — the same
+    * hazard the refresh guards, closed at the rebuild entry points
+    * too. */
+  private def writeClustered(df: DataFrame, path: String,
+                             partCols: Seq[String], dynamic: Boolean,
+                             maxLeaves: Int = Int.MaxValue): Unit =
+    df.repartition(
+        math.min(maxLeaves,
+          df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt),
+        partCols.map(col): _*)
       .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("state", "year_month")
+      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .partitionBy(partCols: _*)
       .option("compression", "zstd")
-      .parquet(outPath)
+      .parquet(path)
 
   /** Serving read: the dashboard path. Addresses the slice directory
     * directly (basePath keeps the partition columns in the schema), so
@@ -378,8 +415,9 @@ object GoldAggregates {
   def materializeDistinctSketch(spark: SparkSession, dir: String,
                                 outPath: String): Unit = {
     invalidateSidecar(outPath)
-    writeSidecar(graft.operators.Sketches.hllRegisters(
-      ratesWithState(spark, dir), Seq("state", "year_month"), "v"), outPath, dynamic = false)
+    writeClustered(graft.operators.Sketches.hllRegisters(
+      ratesWithState(spark, dir), Seq("state", "year_month"), "v"),
+      outPath, Seq("state"), dynamic = false)
     invalidateSidecar(outPath) // drop frames cached mid-overwrite
   }
 
@@ -408,8 +446,9 @@ object GoldAggregates {
   def materializeKmvSketch(spark: SparkSession, dir: String,
                            outPath: String): Unit = {
     invalidateSidecar(outPath)
-    writeSidecar(graft.operators.Sketches.kmvSketch(
-      ratesWithState(spark, dir), Seq("state", "year_month"), "v"), outPath, dynamic = false)
+    writeClustered(graft.operators.Sketches.kmvSketch(
+      ratesWithState(spark, dir), Seq("state", "year_month"), "v"),
+      outPath, Seq("state"), dynamic = false)
     invalidateSidecar(outPath) // drop frames cached mid-overwrite
   }
 
@@ -437,9 +476,10 @@ object GoldAggregates {
   def materializeRateHistogram(spark: SparkSession, dir: String,
                                outPath: String): Unit = {
     invalidateSidecar(outPath)
-    writeSidecar(graft.operators.Sketches.histBuckets(
+    writeClustered(graft.operators.Sketches.histBuckets(
       ratesWithState(spark, dir, "negotiated_rate"),
-      Seq("state", "year_month"), "v"), outPath, dynamic = false)
+      Seq("state", "year_month"), "v"),
+      outPath, Seq("state"), dynamic = false)
     invalidateSidecar(outPath) // drop frames cached mid-overwrite
   }
 
@@ -493,7 +533,8 @@ object GoldAggregates {
       if (graft.FsUtils.committedExists(spark, path)) {
         invalidateSidecar(path)
         dropStateDirs(path)
-        writeSidecar(recomputed, path)
+        writeClustered(recomputed, path, Seq("state"), dynamic = true,
+          maxLeaves = states.size)
         invalidateSidecar(path)
       }
     refreshOne(sketchPath, graft.operators.Sketches.hllRegisters(
@@ -507,25 +548,6 @@ object GoldAggregates {
         ratesWithState(spark, dir).filter(hit),
         Seq("state", "year_month"), "v"))
   }
-
-  /** The one sidecar write recipe (layout rationale at
-    * [[materializeDistinctSketch]]), shared by the materializers and
-    * the streaming refresh. `dynamic = true` (the refresh leg)
-    * overwrites only the partitions present in `df` — callers
-    * pre-drop vanished states
-    * (see [[refreshSketchSlices]]'s dropStateDirs). `dynamic = false`
-    * (the full materialize leg) STATIC-overwrites the whole path, so
-    * a state that vanished from the base since the last materialize
-    * cannot leave a stale partition dir behind — the same hazard the
-    * refresh guards, closed at the rebuild entry points too. */
-  private def writeSidecar(df: DataFrame, path: String,
-                           dynamic: Boolean = true): Unit =
-    df.repartition(col("state"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("state")
-      .option("compression", "zstd")
-      .parquet(path)
 
   /** Resolved-frame cache for the sketch sidecars — the sidecar
     * analogue of the [[readSlice]] cache, and needed for the same

@@ -67,13 +67,13 @@ object Dedup extends QueryPack {
           element_at(tk, i + 2))))
 
   /** doc_id + distinct 3-shingle array, staged projection per step. */
-  private def shingled(s: SparkSession, d: String): DataFrame =
+  private[graft] def shingled(s: SparkSession, d: String): DataFrame =
     augmented(s, d)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), array_distinct(shinglesOf(col("tk"))).as("sh"))
 
   /** Portable 32-bit hash: first 8 hex chars of md5, as a long in [0, 2^32). */
-  private def h32(c: Column): Column =
+  private[graft] def h32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
   private val NumHashes = graft.functions.MinHashSig.DefaultK // 16
@@ -86,18 +86,6 @@ object Dedup extends QueryPack {
     * mins). MinHashNativeSpec proves value-parity with the HOF form. */
   def minhashSignatures(s: SparkSession, d: String): DataFrame =
     minhashSignaturesFor(augmented(s, d), "doc_id", "text")
-
-  /** The original composable (HOF) formulation, kept as the parity
-    * reference for MinHashNativeSpec. */
-  def minhashSignaturesHof(s: SparkSession, d: String): DataFrame = {
-    val hashed = shingled(s, d).select(col("doc_id"),
-      transform(col("sh"), t => h32(t)).as("hs"))
-    hashed.select(col("doc_id") +:
-      minhashAB.zipWithIndex.map { case ((a, b), j) =>
-        array_min(transform(col("hs"),
-          h => pmod(h * lit(a) + lit(b), lit(MinhashP)))).as(s"h$j")
-      }: _*)
-  }
 
   /** SimHash Hamming verify threshold. 4 bands of 16 bits guarantee every
     * pair within Hamming ≤ 3 shares an intact band (pigeonhole). */

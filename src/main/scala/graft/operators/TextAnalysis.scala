@@ -696,25 +696,6 @@ object TextAnalysis extends QueryPack {
       .select(concat_ws(" ", element_at(col("tk"), col("i")),
         element_at(col("tk"), col("i") + 1)).as("pair"))
 
-  /** The composable (HOF) formulation of `text_fingerprint_rolling`,
-    * kept as the parity reference for RollingFpNativeSpec. */
-  def rollingFingerprintHof(s: SparkSession, d: String): DataFrame = {
-    val k = graft.functions.RollingFpKernel.K
-    val bottom = graft.functions.RollingFpKernel.Bottom
-    docs(s, d)
-      .select(col("doc_id"),
-        regexp_replace(lower(col("text")), "\\s+", " ").as("norm"))
-      .select(col("doc_id"),
-        transform(sequence(lit(1), greatest(length(col("norm")) - (k - 1),
-          lit(1))), i => col("norm").substr(i, lit(k))).as("grams"))
-      .select(col("doc_id"),
-        transform(col("grams"), g =>
-          conv(substring(md5(g), 1, 8), 16, 10).cast("long")).as("hs"))
-      .select(col("doc_id"),
-        concat_ws("-", slice(array_sort(col("hs")), 1, bottom))
-          .as("fingerprint"))
-  }
-
   /** Word runs, single digits, single punctuation marks — the shape of
     * a byte-level BPE pre-tokenizer's coarse splits. Shared verbatim
     * with the oracle. */

@@ -56,15 +56,97 @@ class BuildersSpec extends SparkSpec {
       "refresh from identical input must be a no-op row-count-wise")
     // serving read addresses exactly one leaf dir (no full-tree listing)
     val served = GoldAggregates.readSlice(spark, out, slice._1, slice._2)
-    val plan = served.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    // (the rendered Location truncates long paths — the state= segment
-    // is enough to prove the scan targets the slice dir, not the root)
-    assert(plan.contains(s"state=${slice._1}"), plan.take(400))
+    // (read from the scan's file index: the rendered Location truncates
+    // long paths, so whether it shows state= depends on the temp dir)
+    val roots = served.queryExecution.executedPlan.collectLeaves().collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths
+    }.flatten
+    assert(roots.nonEmpty && roots.forall(_.toString.endsWith(
+      s"/state=${slice._1}/year_month=${slice._2}")), roots)
     assert(served.count() > 0)
     // partition columns survive the direct-path read via basePath
     assert(served.columns.contains("state") &&
       served.columns.contains("year_month"))
+  }
+
+  test("gold writers fan slices out over the shuffle partitions, one file per leaf") {
+    val out = tmp()
+    try fanOutBody(out)
+    finally graft.plans.GoldCatalog.invalidate(out + "/agg")
+  }
+
+  /** Every leaf dir `depth` levels of `k=v` below `root` holds exactly
+    * one parquet file. */
+  private def assertOneFilePerLeaf(root: String, depth: Int): Unit = {
+    def leaves(d: java.io.File, k: Int): Seq[java.io.File] =
+      if (k == 0) Seq(d)
+      else d.listFiles().toSeq
+        .filter(f => f.isDirectory && f.getName.contains("="))
+        .flatMap(leaves(_, k - 1))
+    val files = leaves(new java.io.File(root), depth).map { l =>
+      l.getPath -> l.listFiles().count(_.getName.endsWith(".parquet"))
+    }
+    assert(files.size > 1, s"$root: ${files.size} leaves")
+    val bad = files.filter(_._2 != 1)
+    assert(bad.isEmpty, s"$root: ${bad.size} of ${files.size} leaves " +
+      s"do not hold exactly one parquet file, e.g. ${bad.headOption}")
+  }
+
+  private def fanOutBody(out: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler._
+    val gold = out + "/agg"
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(n > 1)
+    // Stages of this test's jobs, those whose tasks wrote rows, and the
+    // task count of every finished stage.
+    val group = "gold_fan_out"
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val wrote = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val numTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          e.stageIds.foreach(ours.add(_))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null &&
+            e.taskMetrics.outputMetrics.recordsWritten > 0)
+          wrote.add(e.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        numTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+    }
+    def writeStages = wrote.asScala.filter(ours.contains).toSeq
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "gold materialize")
+      try GoldAggregates.materialize(spark, sf0001, gold)
+      finally spark.sparkContext.clearJobGroup()
+      // Listener events arrive asynchronously; a stage's task ends are
+      // delivered before its completion.
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!writeStages.exists(numTasks.containsKey) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(writeStages.size == 1, s"write stages: $writeStages")
+    assert(numTasks.get(writeStages.head) == n,
+      s"the gold write ran ${numTasks.get(writeStages.head)} tasks, not " +
+        s"spark.sql.shuffle.partitions = $n")
+    assertOneFilePerLeaf(gold, 2)
+
+    // Refresh slices from several states: still one file per leaf.
+    val slices = spark.read.parquet(gold).select("state", "year_month")
+      .distinct().orderBy("state", "year_month").collect()
+      .groupBy(_.getString(0)).values.map(_.head).take(3)
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(slices.size > 1)
+    GoldAggregates.refreshSlices(spark, sf0001, gold, slices)
+    assertOneFilePerLeaf(gold, 2)
+
+    val sketch = out + "/hll"
+    GoldAggregates.materializeDistinctSketch(spark, sf0001, sketch)
+    assertOneFilePerLeaf(sketch, 1)
   }
 
   test("wide table pipeline: schema + rows end-to-end at sf0.001") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
 /** The native rolling_fp kernel must produce byte-identical
@@ -7,11 +9,30 @@ import graft.operators.TextAnalysis
   * including short (< K chars) and duplicate-hash documents. */
 class RollingFpNativeSpec extends SparkSpec {
 
+  /** The composable (HOF) formulation of `text_fingerprint_rolling`:
+    * the bottom-k md5 gram hashes, the parity reference for the kernel. */
+  private def rollingFingerprintHof(docs: DataFrame): DataFrame = {
+    val k = graft.functions.RollingFpKernel.K
+    val bottom = graft.functions.RollingFpKernel.Bottom
+    docs.select(col("doc_id"),
+        regexp_replace(lower(col("text")), "\\s+", " ").as("norm"))
+      .select(col("doc_id"),
+        transform(sequence(lit(1), greatest(length(col("norm")) - (k - 1),
+          lit(1))), i => col("norm").substr(i, lit(k))).as("grams"))
+      .select(col("doc_id"),
+        transform(col("grams"), g =>
+          conv(substring(md5(g), 1, 8), 16, 10).cast("long")).as("hs"))
+      .select(col("doc_id"),
+        concat_ws("-", slice(array_sort(col("hs")), 1, bottom))
+          .as("fingerprint"))
+  }
+
   test("native rolling_fp == HOF bottom-k gram-hash fingerprint") {
     val native = TextAnalysis.queries("text_fingerprint_rolling")(
       spark, sf0001).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val hof = TextAnalysis.rollingFingerprintHof(spark, sf0001).collect()
+    val hof = rollingFingerprintHof(Tables.load(spark, sf0001, "documents"))
+      .collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(native.keySet == hof.keySet)
     val diffs = native.keySet.filter(k => native(k) != hof(k))
@@ -22,7 +43,6 @@ class RollingFpNativeSpec extends SparkSpec {
   }
 
   test("randomized parity: kernel == HOF on arbitrary unicode strings") {
-    import org.apache.spark.sql.functions._
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
@@ -45,16 +65,7 @@ class RollingFpNativeSpec extends SparkSpec {
     val native = df.select(col("doc_id"), norm.as("norm"))
       .select(col("doc_id"), call_function("rolling_fp", col("norm")))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val k = graft.functions.RollingFpKernel.K
-    val bottom = graft.functions.RollingFpKernel.Bottom
-    val hof = df.select(col("doc_id"), norm.as("norm"))
-      .select(col("doc_id"),
-        transform(sequence(lit(1), greatest(length(col("norm")) - (k - 1),
-          lit(1))), i => col("norm").substr(i, lit(k))).as("grams"))
-      .select(col("doc_id"), transform(col("grams"), g =>
-        conv(substring(md5(g), 1, 8), 16, 10).cast("long")).as("hs"))
-      .select(col("doc_id"),
-        concat_ws("-", slice(array_sort(col("hs")), 1, bottom)))
+    val hof = rollingFingerprintHof(df)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val diffs = native.keySet.filter(id => native(id) != hof(id))
     assert(diffs.isEmpty, s"divergence on inputs: " +
