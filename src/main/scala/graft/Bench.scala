@@ -1,37 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
-  /** One SparkSession recipe for both phases, so probe numbers are
-    * measured under exactly the suite's engine configuration. */
-  private def makeSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // the library's own plugin path
-      .config("spark.sql.shuffle.partitions", "32")
-      // Percentile/mode aggregates are TypedImperative → ObjectHashAggregate,
-      // whose default sort-based fallback threshold (128 in-memory groups)
-      // forces a per-task sort for ANY realistic grain (s15 has ~19k groups
-      // per task at sf0.1; measured 4.6s → 3.4s warm from this alone). 1M
-      // tiny buffers per task is tens of MB — safe at these heap sizes.
-      .config("spark.sql.execution.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // FAIR job scheduling (r15): the suite runs one query at a time
-      // (FAIR == FIFO there), but the REST workload runs 4 concurrent
-      // requests against one context — under FIFO a multi-stage
-      // request's tasks queue behind the whole preceding request,
-      // so p95 read ~2x the slowest leg's solo latency.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHED", "FAIR"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** The one-row fold every timed query is consumed through. A bare
+    * count() lets Catalyst prune projections, so expression-heavy
+    * queries would time only their scan/join skeleton; xxhash64 over
+    * the full row struct forces evaluation of all columns while
+    * returning one row. bit_xor, unlike sum, cannot overflow under
+    * ANSI mode. */
+  private[graft] def consume(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
+    df.agg(bit_xor(xxhash64(struct(col("*")))))
   }
 
   def main(args: Array[String]): Unit =
@@ -107,12 +87,11 @@ object Bench {
     val smallDir = sfDir.replace("sf0.1", "sf0.01")
     if (smallDir == sfDir || !new java.io.File(smallDir).exists())
       return ProbeSecs(Map.empty, Map.empty, Map.empty)
-    import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
     val keep = probeFilter
-    def timeOn(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def timeOn(fn: (SparkSession, String) => DataFrame,
                dir: String): Double = {
       val t0 = System.nanoTime()
-      fn(spark, dir).agg(sum(xxhash64(struct(col("*"))))).collect()
+      consume(fn(spark, dir)).collect()
       (System.nanoTime() - t0) / 1e9
     }
     // Per-probe hygiene, the SAME discipline as the timed suite (r13
@@ -190,8 +169,7 @@ object Bench {
           p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS)
         } catch { case _: Throwable => () }
         synthTables.foreach { t =>
-          try spark.read.parquet(s"$synthDir/$t.parquet")
-            .agg(sum(xxhash64(struct(col("*"))))).collect()
+          try consume(spark.read.parquet(s"$synthDir/$t.parquet")).collect()
           catch { case _: Throwable => () }
         }
         synthNames.filter(keep).flatMap { q =>
@@ -219,7 +197,7 @@ object Bench {
     * and wall-clock window, and suite noise_floor read 0.28). */
   private def probesMain(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = makeSession()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val p = runProbes(spark, sfDir)
     println(s"""GRAFT_PROBES {"small":${mapJson(p.small)},"big":${mapJson(p.big)},"synth":${mapJson(p.synth)},"noise":${mapJson(p.noise)}}""")
@@ -241,7 +219,7 @@ object Bench {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val out = java.nio.file.Files.createTempFile("graft_probes", ".out").toFile
+    val out = new java.io.File(Scratch.fresh("graft_probes"), "stdout")
     val pb = new ProcessBuilder(
       (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
     pb.environment().put("SPARK_GRAFT_PHASE", "probes")
@@ -332,20 +310,10 @@ object Bench {
       // request of this server's lifetime — the plan-build + first-
       // execution cost the caches amortize away for every later hit.
       val coldP95 = p95Of(mix.map(fire).toArray)
-      // per-leg diagnosis (stderr only): sequential min-of-3 per
-      // path, so a p95 regression names its endpoint
-      if (sys.env.get("SPARK_GRAFT_REST_DEBUG").contains("1"))
-        ("/api/health" +: mix).foreach { path =>
-          val t = (1 to 3).map(_ => fire(path)).min
-          System.err.println(f"REST_LEG $t%9.1f ms  $path")
-        }
-      val nThreads =
-        sys.env.getOrElse("SPARK_GRAFT_REST_THREADS", "4").toInt
+      val nThreads = 4
       val perThread = 48 / nThreads
       def concurrentPhase(): (Double, Double) = {
         val lat = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]
-        val byPath = new java.util.concurrent.ConcurrentHashMap[
-          String, java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]]
         val errs = new java.util.concurrent.atomic.AtomicInteger(0)
         val t0 = System.nanoTime()
         val threads = (0 until nThreads).map { t =>
@@ -353,13 +321,7 @@ object Bench {
             var i = 0
             while (i < perThread) {
               val path = mix((t + i) % mix.size)
-              try {
-                val ms = fire(path)
-                lat.add(ms)
-                byPath.computeIfAbsent(path, _ =>
-                  new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double])
-                  .add(ms)
-              }
+              try lat.add(fire(path))
               catch { case _: Throwable => errs.incrementAndGet() }
               i += 1
             }
@@ -378,14 +340,6 @@ object Bench {
           if (th.isAlive) errs.incrementAndGet()
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        if (sys.env.get("SPARK_GRAFT_REST_DEBUG").contains("1")) {
-          import scala.jdk.CollectionConverters._
-          byPath.asScala.toSeq.sortBy(_._1).foreach { case (path, q) =>
-            val a = q.iterator().asScala.map(_.doubleValue).toArray.sorted
-            if (a.nonEmpty) System.err.println(
-              f"REST_CONC p50 ${a(a.length / 2)}%8.1f  max ${a.last}%8.1f ms  $path")
-          }
-        }
         val ls = {
           import scala.jdk.CollectionConverters._
           lat.iterator().asScala.map(_.doubleValue).toArray
@@ -424,7 +378,7 @@ object Bench {
     * last in it, while quiet fresh-JVM records read 104-120 ms. */
   private def restMain(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = makeSession()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val r =
       try restWorkload(spark, sfDir)
@@ -450,7 +404,7 @@ object Bench {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val out = java.nio.file.Files.createTempFile("graft_rest", ".out").toFile
+    val out = new java.io.File(Scratch.fresh("graft_rest"), "stdout")
     val pb = new ProcessBuilder(
       (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
     pb.environment().put("SPARK_GRAFT_PHASE", "rest")
@@ -659,7 +613,7 @@ object Bench {
     // JVM even builds its session: nothing shares the timed window.
     val forked: Option[ProbeSecs] =
       if (probeMode == "fork") spawnProbes() else None
-    val spark = makeSession()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // Sorted-name order: `SparkEntry.queries` is a hash-ordered Map, so
     // adding ANY query used to reshuffle the whole suite's run order.
@@ -697,8 +651,7 @@ object Bench {
         "lineitem", "events", "documents", "embeddings").foreach { t =>
         // tolerant like the per-query loop: a dir lacking some table
         // (custom SPARK_GRAFT_SF_DIR) must not abort the whole bench
-        try spark.read.parquet(s"$sfDir/$t.parquet")
-          .agg(sum(xxhash64(struct(col("*"))))).collect()
+        try consume(spark.read.parquet(s"$sfDir/$t.parquet")).collect()
         catch { case _: Throwable => }
       }
       val w = spark.read.parquet(s"$sfDir/nation.parquet").select("n_nationkey")
@@ -706,10 +659,10 @@ object Bench {
         .groupBy("n_nationkey").count().collect()
       w.limit(30).agg(percentile(col("n_nationkey"), lit(0.5)),
         size(collect_set(col("n_nationkey")))).collect()
-      w.limit(30).withColumn("rn", org.apache.spark.sql.functions.row_number()
+      consume(w.limit(30).withColumn("rn",
+        org.apache.spark.sql.functions.row_number()
           .over(org.apache.spark.sql.expressions.Window
-            .partitionBy("n_nationkey").orderBy("n_nationkey")))
-        .agg(sum(xxhash64(struct(col("*"))))).collect()
+            .partitionBy("n_nationkey").orderBy("n_nationkey")))).collect()
     }
     val explain = sys.env.contains("SPARK_GRAFT_EXPLAIN")
     // Run each query N times, keep the fastest. Default 2 (r11): the
@@ -765,12 +718,7 @@ object Bench {
         try {
           val df = fn(spark, sfDir)
           if (explain) { println(s"=== $name ==="); df.explain("formatted") }
-          // Hash-consume every output column: a bare count() lets Catalyst
-          // prune projections, so expression-heavy queries would time only
-          // their scan/join skeleton. xxhash64 over the full row struct
-          // forces evaluation of all columns while returning one row.
-          import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
-          df.agg(sum(xxhash64(struct(col("*"))))).collect()
+          consume(df).collect()
         } catch { case _: Throwable => -1L }
         (System.nanoTime() - t0) / 1e9
       }
@@ -845,22 +793,19 @@ object Bench {
       graft.etl.GoldAggregates.materialize(spark, sfDir, goldDir)
       val slices = spark.read.parquet(goldDir)
         .select("state", "year_month").distinct().limit(21).collect()
-      import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
       // Untimed warm read of the first slice: pays the one-time FS
       // listing/session init so the timed loop measures steady-state
       // (merely dropping the slice would leave the init cost on the
       // first timed read).
       slices.headOption.foreach { r =>
-        graft.etl.GoldAggregates
-          .readSlice(spark, goldDir, r.getString(0), r.getString(1))
-          .agg(sum(xxhash64(struct(col("*"))))).collect()
+        consume(graft.etl.GoldAggregates
+          .readSlice(spark, goldDir, r.getString(0), r.getString(1))).collect()
       }
       def sliceP50(): Double = {
         val times = slices.drop(1).map { r =>
           val t0 = System.nanoTime()
-          graft.etl.GoldAggregates
-            .readSlice(spark, goldDir, r.getString(0), r.getString(1))
-            .agg(sum(xxhash64(struct(col("*"))))).collect()
+          consume(graft.etl.GoldAggregates
+            .readSlice(spark, goldDir, r.getString(0), r.getString(1))).collect()
           (System.nanoTime() - t0) / 1e6
         }.sorted
         if (times.nonEmpty) times(times.length / 2) else -1.0
@@ -875,9 +820,8 @@ object Bench {
         graft.etl.GoldAggregates.invalidateSlices(goldDir)
         // re-pay the untimed first-slice init the invalidation dropped
         slices.headOption.foreach { r =>
-          graft.etl.GoldAggregates
-            .readSlice(spark, goldDir, r.getString(0), r.getString(1))
-            .agg(sum(xxhash64(struct(col("*"))))).collect()
+          consume(graft.etl.GoldAggregates
+            .readSlice(spark, goldDir, r.getString(0), r.getString(1))).collect()
         }
         sliceP50()
       }
@@ -917,7 +861,7 @@ object Bench {
     // WITHOUT rewriting their query to read the gold table: plan
     // build + routing + a partition-pruned slice read.
     val (routedMs, routedWarmMs): (Double, Double) = try {
-      import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
+      import org.apache.spark.sql.functions.col
       // The metric is only meaningful if routing actually engaged —
       // otherwise (e.g. the serving block failed before registering)
       // we would report multi-second full re-aggregations under a
@@ -931,10 +875,9 @@ object Bench {
         val slices = probe.select("state", "year_month")
           .distinct().limit(11).collect()
         def readSlice(r: org.apache.spark.sql.Row): Unit =
-          graft.etl.GoldAggregates.aggMarketRates(spark, sfDir)
+          consume(graft.etl.GoldAggregates.aggMarketRates(spark, sfDir)
             .filter(col("state") === r.getString(0) &&
-              col("year_month") === r.getString(1))
-            .agg(sum(xxhash64(struct(col("*"))))).collect()
+              col("year_month") === r.getString(1))).collect()
         slices.headOption.foreach(readSlice) // untimed warm read
         def routedP50(): Double = {
           val times = slices.drop(1).map { r =>

@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // the library's own plugin path
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See Bench.scala: default 128-group fallback forces per-task sorts
-      // under every percentile aggregation.
-      .config("spark.sql.execution.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet ts encoding varies by testdata generation —
-      // int64 nanos (rounds ≤ 6) or TIMESTAMP(MICROS) (round 7+).
-      // The conf makes the nanos layout read as long; eventFeed
-      // normalizes from whichever type it observes.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // S2 salvage is per-read (Tables.readSalvage), NOT global: the
-      // verify harness must fail loudly if an input file is corrupt,
-      // or data loss would masquerade as an oracle mismatch.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local debugging: SPARK_GRAFT_ONLY=name1,name2 restricts the dump.

@@ -1,26 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry: full star-schema batch build (SURVEY §7.1 app/).
   * Usage: runMain graft.etl.BuildMain <sfDir> <outDir>
   * Idempotent: re-running against the same outDir appends nothing. */
 object BuildMain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See Bench.scala: default 128-group fallback forces per-task sorts
-      // under every percentile aggregation.
-      .config("spark.sql.execution.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // silver: star schema (dims + xrefs + fact upsert)
     StarSchemaBuilder.runFull(spark, sfDir, outDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase profiler for the routed-MV dashboard path (`routed_ms_p50` in
@@ -14,15 +13,7 @@ import org.apache.spark.sql.functions._
 object RoutedProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
 
     val goldDir = graft.Scratch.fresh("graft_gold") + "/agg"
@@ -40,9 +31,8 @@ object RoutedProfile {
         val base = graft.etl.GoldAggregates.aggMarketRates(spark, sfDir)
         val tBase = ms(t0)
         val t1 = System.nanoTime()
-        val df = base.filter(col("state") === r.getString(0) &&
-          col("year_month") === r.getString(1))
-          .agg(sum(xxhash64(struct(col("*")))))
+        val df = graft.Bench.consume(base.filter(
+          col("state") === r.getString(0) && col("year_month") === r.getString(1)))
         val tFilter = ms(t1)
         val t2 = System.nanoTime()
         df.queryExecution.optimizedPlan

@@ -19,4 +19,17 @@ class AnsiModeSpec extends SparkSpec {
     assert(off.nonEmpty)
     assert(on == off)
   }
+
+  test("Bench.consume folds a frame whose hash sum overflows with ANSI on") {
+    import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
+    val ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    val df = ansi.range(1000).toDF("id")
+    val hashes = df.select(xxhash64(struct(col("*")))).collect().map(_.getLong(0))
+    val overflow = intercept[Exception] {
+      df.agg(sum(xxhash64(struct(col("*"))))).collect()
+    }
+    assert(overflow.getMessage.contains("ARITHMETIC_OVERFLOW"))
+    assert(Bench.consume(df).head.getLong(0) == hashes.reduce(_ ^ _))
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Percentile}
 import org.apache.spark.sql.functions._
 import graft.etl.GoldAggregates
@@ -24,16 +23,7 @@ class ApproxTierSpec extends SparkSpec {
   }
 
   test("approx conf swaps exact percentile for the KLL sketch") {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = spark.newSession() // the approx conf stays in this session
     try {
       graft.plans.GoldCatalog.clear()
       // default: exact
@@ -66,10 +56,6 @@ class ApproxTierSpec extends SparkSpec {
       }
       assert(bad.size <= exact.size / 50,
         s"approx p50 outside envelope for ${bad.size}/${exact.size} groups")
-    } finally {
-      graft.plans.GoldCatalog.clear()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    } finally graft.plans.GoldCatalog.clear()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.functions._
@@ -39,16 +38,7 @@ class GoldRoutingSpec extends SparkSpec {
     }.flatten
 
   test("identical aggregate routes to the gold scan; near-miss does not") {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = spark.newSession() // 4b below sets the routing conf
     try {
       GoldCatalog.clear()
       val goldDir =
@@ -105,10 +95,9 @@ class GoldRoutingSpec extends SparkSpec {
       }
       // (4b: the user-facing session conf)
       s.conf.set(GoldCatalog.RoutingConfKey, "false")
-      try {
-        val off = GoldAggregates.aggMarketRates(s, sf0001)
-        assert(aggNodes(off).nonEmpty)
-      } finally s.conf.set(GoldCatalog.RoutingConfKey, "true")
+      val off = GoldAggregates.aggMarketRates(s, sf0001)
+      assert(aggNodes(off).nonEmpty)
+      s.conf.set(GoldCatalog.RoutingConfKey, "true")
 
       // 5: invalidate drops the registration
       GoldCatalog.invalidate(goldDir)
@@ -123,10 +112,6 @@ class GoldRoutingSpec extends SparkSpec {
       assert(aggNodes(reattached).isEmpty &&
         scanPaths(reattached).exists(_.contains("graft_goldroute")),
         "registerExisting must restore routing without a rebuild")
-    } finally {
-      GoldCatalog.clear()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    } finally GoldCatalog.clear()
   }
 }

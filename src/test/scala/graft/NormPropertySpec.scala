@@ -101,7 +101,6 @@ class NormPropertySpec extends SparkSpec {
 
   test("bloom law on hostile strings: every member probes true, prefilter = exact") {
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     // hostile inserted set (empties, unicode, near-dupes) + a disjoint
     // probe set; the law that makes dedup_bloom_prefilter sound is
     // ONLY no-false-negatives — false positives are allowed and are

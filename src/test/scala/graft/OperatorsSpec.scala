@@ -942,7 +942,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("filtered ANN: exact top-k over the predicate subset at nprobe=K") {
-    graft.GraftExtensions.registerAll(spark) // cosine_f32 kernel
     val e = Tables.load(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val cents = Similarity.centroids(

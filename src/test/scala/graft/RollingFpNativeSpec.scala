@@ -60,7 +60,6 @@ class RollingFpNativeSpec extends SparkSpec {
     }.drop(200).next()._2.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }
     val df = samples.toDF("doc_id", "text")
-    graft.GraftExtensions.registerAll(spark)
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
     val native = df.select(col("doc_id"), norm.as("norm"))
       .select(col("doc_id"), call_function("rolling_fp", col("norm")))

@@ -157,37 +157,27 @@ class ServingRefreshSpec extends SparkSpec {
   }
 
   test("bootstrapRouting: a fresh JVM routes from the sidecar alone") {
-    val base = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val work = Files.createTempDirectory("graft_bootstrap").toString
     val gold = s"$work/gold"
     try {
-      GoldAggregates.materialize(s, sf0001, gold)
+      GoldAggregates.materialize(spark, sf0001, gold)
       // the sidecar landed at the table root, underscore-ignored by reads
       assert(new java.io.File(gold, "_graft_gold.json").isFile)
       // simulate JVM death: every in-process registration is gone
       graft.plans.GoldCatalog.clear()
       assert(!graft.plans.GoldCatalog.isRegistered(gold))
       // startup call with ONLY the table path — no source-dir knowledge
-      assert(GoldAggregates.bootstrapRouting(s, gold))
+      assert(GoldAggregates.bootstrapRouting(spark, gold))
       assert(graft.plans.GoldCatalog.isRegistered(gold))
       // and the registration actually routes: the inline aggregate's
       // optimized plan must be aggregate-free (swapped for the scan)
-      val routed = GoldAggregates.aggMarketRates(s, sf0001)
+      val routed = GoldAggregates.aggMarketRates(spark, sf0001)
       val hasAgg = routed.queryExecution.optimizedPlan.collect {
         case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
       }.nonEmpty
       assert(!hasAgg, "bootstrap registration did not route")
       // a sidecar-less path refuses quietly
-      assert(!GoldAggregates.bootstrapRouting(s, s"$work/nothere"))
+      assert(!GoldAggregates.bootstrapRouting(spark, s"$work/nothere"))
       // a fingerprint mismatch (defining query changed since the
       // build) refuses rather than registering a dead key
       graft.plans.GoldCatalog.clear()
@@ -199,13 +189,9 @@ class ServingRefreshSpec extends SparkSpec {
       // drop Hadoop's local-fs checksum sidecar so the read reaches the
       // fingerprint check (a raw rewrite invalidates the .crc)
       new java.io.File(gold, "._graft_gold.json.crc").delete()
-      assert(!GoldAggregates.bootstrapRouting(s, gold))
+      assert(!GoldAggregates.bootstrapRouting(spark, gold))
       assert(!graft.plans.GoldCatalog.isRegistered(gold))
-    } finally {
-      graft.plans.GoldCatalog.clear()
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-    }
+    } finally graft.plans.GoldCatalog.clear()
   }
 
   test("slice-read cache: repeats reuse the resolved frame, refresh drops it") {

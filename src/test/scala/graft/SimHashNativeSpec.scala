@@ -26,7 +26,6 @@ class SimHashNativeSpec extends SparkSpec {
     // Without the sentinel, sign() on zero tokens emits 0xFFFF… (2·0 ≥ 0
     // for every bit) and all tokenless docs band-collide as Hamming-0
     // near-dups. NULL never joins, so they produce no candidate pairs.
-    GraftExtensions.registerAll(spark)
     val sigs = spark.range(3).select(
       call_function("simhash_sig",
         array().cast("array<string>")).as("simhash"))

@@ -11,7 +11,6 @@ class SubwordNativeSpec extends SparkSpec {
   import spark.implicits._
 
   private def encode(word: String, vocab: Seq[String]): Seq[String] = {
-    graft.GraftExtensions.registerAll(spark)
     Seq(word).toDF("word")
       .select(call_function("subword_encode", col("word"),
         lit(vocab.toArray)).as("t"))
@@ -39,7 +38,6 @@ class SubwordNativeSpec extends SparkSpec {
     assert(encode(astral, Seq("zz")).mkString == astral,
       "surrogate pair split by the single-char fallback")
     // null ELEMENTS in the vocab are skipped, not NPE'd
-    graft.GraftExtensions.registerAll(spark)
     val withNullElem = Seq("x").toDF("word")
       .select(call_function("subword_encode", col("word"),
         array(lit("x"), lit(null).cast("string"))).as("t"))
@@ -91,7 +89,6 @@ class SubwordNativeSpec extends SparkSpec {
     val words = (1 to 300).map(_ =>
       (1 to (1 + rng.nextInt(14))).map(_ =>
         alphabet(rng.nextInt(alphabet.length))).mkString)
-    graft.GraftExtensions.registerAll(spark)
     val got = words.toDF("word")
       .select(col("word"), call_function("subword_encode", col("word"),
         lit(vocab.toArray)).as("t"))

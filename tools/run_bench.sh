@@ -13,5 +13,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 MEM="${SPARK_DRIVER_MEM:-8g}"
-exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+exec java $OPENS \
   -Xmx$MEM -Xms$MEM -cp "$CP" graft.Bench "$@"

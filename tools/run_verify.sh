@@ -22,7 +22,7 @@ done
 rm -rf "$OUT" "$SCRATCH"
 mkdir -p "$SCRATCH"
 trap 'rm -rf "$SCRATCH"' EXIT
-java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+java $OPENS \
   -Djava.io.tmpdir="$SCRATCH" \
   -Xmx"$HEAP" -Xms"$HEAP" -cp "$CP" graft.Verify "$SF" "$OUT"
 python3 "$REPO/tools/compare_oracle.py" "$SF" "$OUT"
