@@ -15,12 +15,16 @@ class BuildersSpec extends SparkSpec {
   test("agg_market_rates: materialized table equals inline aggregate") {
     val out = tmp() + "/agg"
     GoldAggregates.materialize(spark, sf0001, out)
-    // don't leak a temp-dir routing registration to later suites
-    try testBody(out) finally graft.plans.GoldCatalog.invalidate(out)
+    // don't leak a temp-dir routing registration to later suites; the
+    // shared session would route the reference aggregate to `out`
+    // itself, so build it with routing off (a real re-aggregation)
+    try graft.plans.GoldCatalog.withRoutingDisabled(spark)(testBody(out))
+    finally graft.plans.GoldCatalog.invalidate(out)
   }
 
   private def testBody(out: String): Unit = {
     val inline = GoldAggregates.aggMarketRates(spark, sf0001)
+    assert(hasAggregate(inline), "the reference must re-aggregate")
     val matzd = spark.read.parquet(out)
     assert(matzd.count() == inline.count())
     assert(matzd.columns.sorted.sameElements(inline.columns.sorted))

@@ -73,11 +73,16 @@ class ServingRefreshSpec extends SparkSpec {
     assert(changed.isEmpty,
       s"slices not in the delta were rewritten: ${changed.take(5)}")
 
-    // refreshed slice still equals the inline aggregate's slice
-    val inline = GoldAggregates.aggMarketRates(spark, sf0001)
-      .filter(col("state") === s0 && col("year_month") === ym0)
-      .drop("state", "year_month")
-      .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
+    // refreshed slice still equals the inline aggregate's slice; the
+    // refresh re-registered `gold`, so the reference is built with
+    // routing off (else it would read the refreshed table back)
+    val inline = graft.plans.GoldCatalog.withRoutingDisabled(spark) {
+      val agg = GoldAggregates.aggMarketRates(spark, sf0001)
+      assert(hasAggregate(agg), "the reference must re-aggregate")
+      agg.filter(col("state") === s0 && col("year_month") === ym0)
+        .drop("state", "year_month")
+        .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
+    }
     val servedRows = GoldAggregates.readSlice(spark, gold, s0, ym0)
       .drop("state", "year_month")
       .select(GoldAggregates.aggMarketRates(spark, sf0001)
@@ -172,10 +177,7 @@ class ServingRefreshSpec extends SparkSpec {
       // and the registration actually routes: the inline aggregate's
       // optimized plan must be aggregate-free (swapped for the scan)
       val routed = GoldAggregates.aggMarketRates(spark, sf0001)
-      val hasAgg = routed.queryExecution.optimizedPlan.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }.nonEmpty
-      assert(!hasAgg, "bootstrap registration did not route")
+      assert(!hasAggregate(routed), "bootstrap registration did not route")
       // a sidecar-less path refuses quietly
       assert(!GoldAggregates.bootstrapRouting(spark, s"$work/nothere"))
       // a fingerprint mismatch (defining query changed since the

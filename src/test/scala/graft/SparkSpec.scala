@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one JVM-wide session — specs
@@ -16,4 +16,11 @@ abstract class SparkSpec extends AnyFunSuite {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Whether `df`'s optimized plan still aggregates: false once the
+    * gold routing rule has swapped the aggregate for a table scan. */
+  def hasAggregate(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }.nonEmpty
 }
