@@ -205,10 +205,14 @@ object Bench {
     sys.exit(0)
   }
 
-  /** Launch the probe phase as a separate prior JVM (same JVM flags,
-    * same classpath) and parse its stdout. None on any failure — the
-    * caller then falls back to in-JVM probes after the suite. */
-  private def spawnProbes(): Option[ProbeSecs] = try {
+  /** Run `phase` of this main (`SPARK_GRAFT_PHASE`) in a child JVM with
+    * the same JVM flags and classpath, and return the last stdout line
+    * that starts with `marker` (the marker stripped). None on any
+    * failure — a non-zero exit, no marker line, or a run past
+    * `timeoutMin` minutes (then the child is killed) — and the caller
+    * falls back to running the phase in this JVM. */
+  private def spawnPhase(phase: String, marker: String,
+                         timeoutMin: Long): Option[String] = try {
     val javaBin = java.nio.file.Paths
       .get(sys.props("java.home"), "bin", "java").toString
     val cp = sys.props("java.class.path")
@@ -219,35 +223,39 @@ object Bench {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val out = new java.io.File(Scratch.fresh("graft_probes"), "stdout")
+    val out = new java.io.File(Scratch.fresh(s"graft_$phase"), "stdout")
     val pb = new ProcessBuilder(
       (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
-    pb.environment().put("SPARK_GRAFT_PHASE", "probes")
+    pb.environment().put("SPARK_GRAFT_PHASE", phase)
     pb.redirectErrorStream(true)
     pb.redirectOutput(out)
     val proc = pb.start()
-    // Generous cap: the probe phase historically runs 10-20 min at
-    // sf0.1. On timeout, kill and record no slopes rather than letting
-    // the suite wait forever.
-    if (!proc.waitFor(40, java.util.concurrent.TimeUnit.MINUTES)) {
+    if (!proc.waitFor(timeoutMin, java.util.concurrent.TimeUnit.MINUTES)) {
       proc.destroyForcibly(); return None
     }
     if (proc.exitValue() != 0) return None
-    val line = scala.io.Source.fromFile(out).getLines()
-      .filter(_.startsWith("GRAFT_PROBES ")).toSeq.lastOption
-    line.map { l =>
+    val src = scala.io.Source.fromFile(out)
+    try src.getLines().filter(_.startsWith(marker + " ")).toSeq.lastOption
+      .map(_.drop(marker.length + 1))
+    finally src.close()
+  } catch { case _: Throwable => None }
+
+  /** The probe phase as a prior child JVM. Generous cap: the phase
+    * historically runs 10-20 min at sf0.1. */
+  private def spawnProbes(): Option[ProbeSecs] =
+    spawnPhase("probes", "GRAFT_PROBES", 40).map { l =>
       def section(name: String): Map[String, Double] = {
         val re = ("\"" + name + "\":\\{([^}]*)\\}").r
         re.findFirstMatchIn(l).map(_.group(1)).map { body =>
           val pair = "\"([^\"]+)\":([0-9.Ee+-]+)".r
           pair.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
+            .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _))
+            .toMap
         }.getOrElse(Map.empty)
       }
       ProbeSecs(section("small"), section("big"), section("synth"),
         section("noise"))
     }
-  } catch { case _: Throwable => None }
 
   // ----------------------------------------------------------------- rest
 
@@ -392,41 +400,16 @@ object Bench {
     sys.exit(0)
   }
 
-  /** Launch the REST phase as a separate child JVM and parse its
-    * stdout — the same contract as [[spawnProbes]]. None on any
-    * failure; the caller then falls back to the in-JVM workload. */
-  private def spawnRest(): Option[RestStats] = try {
-    val javaBin = java.nio.file.Paths
-      .get(sys.props("java.home"), "bin", "java").toString
-    val cp = sys.props("java.class.path")
-    if (!cp.contains("spark")) return None // sbt launcher-jar classpath
-    import scala.jdk.CollectionConverters._
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val out = new java.io.File(Scratch.fresh("graft_rest"), "stdout")
-    val pb = new ProcessBuilder(
-      (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
-    pb.environment().put("SPARK_GRAFT_PHASE", "rest")
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(out)
-    val proc = pb.start()
-    // the workload is index builds + 48 bounded requests: minutes, not
-    // tens of minutes — cap generously, kill on overrun
-    if (!proc.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)) {
-      proc.destroyForcibly(); return None
-    }
-    if (proc.exitValue() != 0) return None
-    val line = scala.io.Source.fromFile(out).getLines()
-      .filter(_.startsWith("GRAFT_REST ")).toSeq.lastOption
-    line.flatMap { l =>
+  /** The REST phase as a child JVM. The workload is index builds + 48
+    * bounded requests: minutes, not tens of minutes. */
+  private def spawnRest(): Option[RestStats] =
+    spawnPhase("rest", "GRAFT_REST", 20).flatMap { l =>
       def field(name: String): Option[Double] =
         ("\"" + name + "\":(-?[0-9.Ee+-]+)").r
-          .findFirstMatchIn(l).map(_.group(1).toDouble)
+          .findFirstMatchIn(l).flatMap(_.group(1).toDoubleOption)
       for (rps <- field("rps"); p95 <- field("p95");
            cold <- field("p95_cold")) yield RestStats(rps, p95, cold)
     }
-  } catch { case _: Throwable => None }
 
   // ------------------------------------------------------- history / drift
 

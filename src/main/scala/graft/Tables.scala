@@ -13,6 +13,27 @@ import org.apache.spark.sql.functions._
   * are ever decoded.
   */
 object Tables {
+  /** Resolved base-table frames per (session, path). Building a scan —
+    * relation resolution, file listing, footer/schema read — costs
+    * ~40 ms per `spark.read.parquet` call, paid per query on the
+    * serving path (a routed dashboard query re-derives its defining
+    * plan from these loaders every time). The frame is immutable and
+    * reusable, so cache it; same LRU bound and rationale as
+    * [[graft.plans.GoldCatalog]]'s scan cache. Base tables are
+    * read-only inputs here — a pipeline that rewrites one mid-session
+    * must call [[invalidate]] with its dir. */
+  private val loads =
+    new ResolvedCache[(SparkSession, String), DataFrame](64, _._2, _._1)
+
+  /** Scoped invalidation (r16): drop only the cached load frames
+    * under `dir`, for every session — a serving refresh of ONE data
+    * dir must not blast the whole JVM's resolved listings (a second
+    * server or a batch session would silently re-list its untouched
+    * tables, and a server whose dir is mid-rewrite could pick the new
+    * files up before its own refresh epoch swapped). A load that was
+    * listing when this ran returns its frame uncached. */
+  def invalidate(dir: String): Unit = loads.invalidate(dir)
+
   /** Load a testdata table, rebalancing pathological input splits.
     *
     * The testdata files are single-row-group parquet, which the reader
@@ -23,54 +44,8 @@ object Tables {
     * partition count is sized from file bytes (~256 KiB per partition,
     * capped at the session's core count) so tiny dims are not shuffled.
     */
-  /** Resolved base-table frames per (session, path). Building a scan —
-    * relation resolution, file listing, footer/schema read — costs
-    * ~40 ms per `spark.read.parquet` call, paid per query on the
-    * serving path (a routed dashboard query re-derives its defining
-    * plan from these loaders every time). The frame is immutable and
-    * reusable, so cache it; same LRU bound and rationale as
-    * [[graft.plans.GoldCatalog]]'s scan cache. Base tables are
-    * read-only inputs here — a pipeline that rewrites one mid-session
-    * must call [[invalidateCache]]. */
-  private val LoadCacheMax = 64
-  private val loadCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]) =
-        size() > LoadCacheMax
-    })
-
-  def invalidateCache(): Unit = loadCache.clear()
-
-  /** Scoped invalidation (r16): drop only the cached load frames
-    * under `dir`, for every session — a serving refresh of ONE data
-    * dir must not blast the whole JVM's resolved listings (a second
-    * server or a batch session would silently re-list its untouched
-    * tables, and a server whose dir is mid-rewrite could pick the new
-    * files up before its own refresh epoch swapped). */
-  def invalidate(dir: String): Unit = loadCache.synchronized {
-    val prefix = dir.stripSuffix("/") + "/"
-    loadCache.keySet().removeIf(
-      (k: (SparkSession, String)) => k._2.startsWith(prefix))
-    ()
-  }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = (spark, s"$dir/$name.parquet")
-    val hit = loadCache.synchronized(loadCache.get(key))
-    if (hit != null) hit
-    else {
-      // built outside the monitor (listing can take a while; racing
-      // builders are harmless — the loser's frame is discarded)
-      val built = buildLoad(spark, dir, name)
-      loadCache.synchronized {
-        val raced = loadCache.get(key)
-        if (raced != null) raced
-        else { loadCache.put(key, built); built }
-      }
-    }
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    loads.get((spark, s"$dir/$name.parquet"))(buildLoad(spark, dir, name))
 
   private def buildLoad(spark: SparkSession, dir: String,
                         name: String): DataFrame = {

@@ -202,22 +202,6 @@ object EnrichmentDims {
       .select(keys.map(col) ++ payload.map(c => col(s"top.$c").as(c)): _*)
   }
 
-  /** Publish a rewritten dim atomically: write to the `.compacting`
-    * side dir, then two-rename swap. Readers never see a half-written
-    * dim; a crash between the renames is healed by
-    * [[graft.streaming.DedupStream.recoverCompaction]] (run at the top
-    * of every dim-maintenance entry point here). */
-  private def publishSwapped(spark: SparkSession, path: String,
-                             df: DataFrame): Unit = {
-    val (fs, root) = graft.streaming.DedupStream.fsOf(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      path + graft.streaming.DedupStream.CompactTmpSuffix)
-    fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(tmp.toString)
-    graft.streaming.DedupStream.swapDirs(fs, root, tmp)
-  }
-
   /** Schema migration for a persisted dim — the reference's
     * evolve-in-place (prod_etl/migrate_dim_npi.py:16-60): add each
     * missing column with its backfill expression, leave columns
@@ -240,8 +224,11 @@ object EnrichmentDims {
     if (backup)
       dim.write.mode(SaveMode.Overwrite)
         .option("compression", "zstd").parquet(s"$path.backup")
-    publishSwapped(spark, path,
-      missing.foldLeft(dim) { case (df, (n, c)) => df.withColumn(n, c) })
+    val evolved =
+      missing.foldLeft(dim) { case (df, (n, c)) => df.withColumn(n, c) }
+    graft.streaming.DedupStream.publishSwapped(spark, path)(tmp =>
+      evolved.write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd").parquet(tmp))
     true
   }
 
@@ -262,7 +249,9 @@ object EnrichmentDims {
     val present = keyFields.filter(dim.columns.contains)
     val hasData = present.map(col(_).isNotNull)
       .foldLeft(lit(false))(_ || _)
-    publishSwapped(spark, path, dim.withColumn(flagCol, hasData))
+    graft.streaming.DedupStream.publishSwapped(spark, path)(tmp =>
+      dim.withColumn(flagCol, hasData).write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd").parquet(tmp))
   }
 }
 

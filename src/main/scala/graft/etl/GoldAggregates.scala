@@ -36,17 +36,10 @@ object GoldAggregates {
     * makes every cached frame unreachable instead of stale (exactly the
     * [[readSlice]] resolved-frame discipline, one level up). Only
     * frames that actually routed are cached: an UNROUTED frame pins
-    * base-table file listings whose freshness this cache must not own.
-    * Same size-bounded LRU + stopped-session sweep as the catalog's
-    * scan cache. */
-  private val FrameCacheMax = 64
-  private val frameCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String, Long), DataFrame](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long), DataFrame]) =
-        size() > FrameCacheMax
-    })
+    * base-table file listings whose freshness this cache must not own. */
+  private val routedFrames =
+    new graft.ResolvedCache[(SparkSession, String, Long), DataFrame](
+      64, _._2, _._1)
 
   /** The aggregate as a query over the raw roles (inline form; the
     * oracle-checked shape). Serving calls (routing enabled) return the
@@ -57,19 +50,9 @@ object GoldAggregates {
     if (!graft.plans.GoldCatalog.routingEnabled(spark))
       return buildAggMarketRates(spark, dir)
     val k = (spark, dir, graft.plans.GoldCatalog.gen())
-    val hit = frameCache.synchronized(frameCache.get(k))
-    if (hit != null) hit
-    else {
-      val df = buildAggMarketRates(spark, dir)
-      val routed = df.queryExecution.analyzed.collectFirst {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }.isEmpty
-      if (routed) frameCache.synchronized {
-        frameCache.keySet().removeIf(e => e._1.sparkContext.isStopped)
-        frameCache.put(k, df)
-      }
-      df
-    }
+    routedFrames.get(k, keep = _.queryExecution.analyzed.collectFirst {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }.isEmpty)(buildAggMarketRates(spark, dir))
   }
 
   private def buildAggMarketRates(spark: SparkSession,
@@ -380,12 +363,10 @@ object GoldAggregates {
 
   /** LRU-bounded for the same session-pinning reason as
     * [[graft.plans.GoldCatalog]]'s scan cache; 256 because slices are
-    * per-(state, ym) — a dashboard's working set, not a table count.
-    * (The cache class moved to [[graft.ResolvedCache]] in r15 so the
-    * GenStore-backed index probes share the one implementation.) */
+    * per-(state, ym) — a dashboard's working set, not a table count. */
   private val sliceFrames =
-    new graft.ResolvedCache[(SparkSession, String, String, String)](
-      256, _._2, _._1)
+    new graft.ResolvedCache[
+      (SparkSession, String, String, String), DataFrame](256, _._2, _._1)
 
   // --------------------------------------------- distinct-count sketches
 
@@ -566,7 +547,7 @@ object GoldAggregates {
   def invalidateSidecar(path: String): Unit = sidecarFrames.invalidate(path)
 
   private val sidecarFrames =
-    new graft.ResolvedCache[(SparkSession, String)](64, _._2, _._1)
+    new graft.ResolvedCache[(SparkSession, String), DataFrame](64, _._2, _._1)
 
   /** Distinct-provider estimate at an arbitrary rollup grain from the
     * register sidecar: filter to the slices of interest (partition

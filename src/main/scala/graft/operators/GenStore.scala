@@ -27,7 +27,7 @@ import graft.streaming.DedupStream
   *
   * Single-writer maintenance assumed (one append/fold job at a time);
   * readers are unrestricted. The stats swap uses
-  * [[DedupStream.swapDirs]]'s two-rename publish and is healed by
+  * [[DedupStream.publishSwapped]]'s two-rename publish and is healed by
   * [[DedupStream.recoverCompaction]] at the next maintenance call.
   */
 object GenStore {
@@ -95,7 +95,7 @@ object GenStore {
     * dataPath, so a cached view can never miss a committed generation.
     * GC'd files are tolerated by the view's own ignoreMissingFiles. */
   private val committedCache =
-    new graft.ResolvedCache[(SparkSession, String)](64, _._2, _._1)
+    new graft.ResolvedCache[(SparkSession, String), DataFrame](64, _._2, _._1)
 
   /** Drop cached committed views under `dataPath`. Writers inside
     * this object call it automatically; external rebuilds that bypass
@@ -213,13 +213,9 @@ object GenStore {
       .withColumn("ingest_batch", lit(newGen))
       .unionByName(normalized.filter(!col("ingest_batch").isin(foldLits: _*)))
       .coalesce(1)
-    val (sfs, statsRoot) = DedupStream.fsOf(spark, statsPath)
-    val tmp = new org.apache.hadoop.fs.Path(
-      statsPath + DedupStream.CompactTmpSuffix)
-    sfs.delete(tmp, true)
-    fresh.write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
-      .option("compression", "zstd").parquet(tmp.toString)
-    DedupStream.swapDirs(sfs, statsRoot, tmp)
+    DedupStream.publishSwapped(spark, statsPath)(tmp =>
+      fresh.write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
+        .option("compression", "zstd").parquet(tmp))
     // 3. GC: drop data partitions with no marker (folded sources and
     // crashed-append orphans alike) — already invisible. A crash
     // before this step costs disk, never correctness, and the

@@ -575,19 +575,15 @@ object Layout extends QueryPack {
     val n = rows.count()
     // the DedupStream compaction suffix conventions, so
     // recoverCompaction heals a crash at any point of the swap
-    val tmp = dir + graft.streaming.DedupStream.CompactTmpSuffix
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    zorderWrite(spark, rows, cols, tmp, nFiles, bits)
-    blooms.foreach { case (key, (est, nb)) =>
-      writeBloomManifest(spark, tmp, key, est, nb)
+    graft.streaming.DedupStream.publishSwapped(spark, dir) { tmp =>
+      zorderWrite(spark, rows, cols, tmp, nFiles, bits)
+      blooms.foreach { case (key, (est, nb)) =>
+        writeBloomManifest(spark, tmp, key, est, nb)
+      }
+      FsUtils.writeString(spark, s"$tmp/_fold_high", newFoldHigh.toString)
+      streamBase.foreach(b =>
+        FsUtils.writeString(spark, s"$tmp/_stream_base", b))
     }
-    FsUtils.writeString(spark, s"$tmp/_fold_high", newFoldHigh.toString)
-    streamBase.foreach(b =>
-      FsUtils.writeString(spark, s"$tmp/_stream_base", b))
-    graft.streaming.DedupStream.swapDirs(fs, p,
-      new org.apache.hadoop.fs.Path(tmp))
     n
   }
 
@@ -681,11 +677,8 @@ object Layout extends QueryPack {
         // First conversion of a plain hive leaf (no manifest yet).
         graft.streaming.DedupStream.recoverCompaction(spark, leaf.toString)
         val rows = spark.read.parquet(leaf.toString)
-        val tmp = leaf.toString + graft.streaming.DedupStream.CompactTmpSuffix
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        zorderWrite(spark, rows, cols, tmp, nFiles, bits)
-        graft.streaming.DedupStream.swapDirs(fs, leaf,
-          new org.apache.hadoop.fs.Path(tmp))
+        graft.streaming.DedupStream.publishSwapped(spark, leaf.toString)(
+          tmp => zorderWrite(spark, rows, cols, tmp, nFiles, bits))
       }
     }
     leafDirs.size

@@ -209,14 +209,10 @@ object Retrieval extends QueryPack {
         .partitionBy("ingest_batch", "bucket")
         .option("compression", "zstd").parquet(s"$dir/postings")
       // 2. the commit point: swap stats to the one new marker row
-      val (sfs, statsRoot) = DedupStream.fsOf(spark, s"$dir/stats")
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$dir/stats" + DedupStream.CompactTmpSuffix)
-      sfs.delete(tmp, true)
-      statsOf(gen)
-        .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
-        .parquet(tmp.toString)
-      DedupStream.swapDirs(sfs, statsRoot, tmp)
+      DedupStream.publishSwapped(spark, s"$dir/stats")(tmp =>
+        statsOf(gen)
+          .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
+          .parquet(tmp))
       // 3. GC the now-unmarked old generations (disk only; a crash
       // here is reclaimed by the next maintenance call's sweep)
       GenStore.gcUnmarked(spark, s"$dir/postings", s"$dir/stats")

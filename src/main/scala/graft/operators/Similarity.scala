@@ -732,7 +732,7 @@ object Similarity extends QueryPack {
     * slice of the latency. Rebuild entry points invalidate; appends
     * never touch sidecars (that is the version contract). */
   private val sidecarCache =
-    new graft.ResolvedCache[(SparkSession, String)](64, _._2, _._1)
+    new graft.ResolvedCache[(SparkSession, String), DataFrame](64, _._2, _._1)
 
   private def readSidecar(spark: SparkSession, path: String): DataFrame =
     sidecarCache.get((spark, path))(spark.read.parquet(path))

@@ -70,58 +70,20 @@ object GoldCatalog {
     * Size-bounded LRU: entries hold a SparkSession reference, and an
     * unbounded map would pin short-lived sessions (and their file
     * listings) forever in a long-running driver. */
-  private val ScanCacheMax = 64
-  private val scanCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String), LogicalPlan](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), LogicalPlan]) =
-        size() > ScanCacheMax
-    })
+  private val scans =
+    new graft.ResolvedCache[(SparkSession, String), LogicalPlan](
+      64, _._2, _._1)
 
-  /** Cached analyzed scan of a registered materialization. The file
-    * listing happens OUTSIDE the cache monitor — it can take seconds
-    * on a many-slice table, and holding the global lock for it would
-    * stall every other routed query's analysis (two threads may race
-    * to build the same scan; the loser's work is discarded). */
-  private[plans] def scanOf(spark: SparkSession, path: String): LogicalPlan = {
-    val k = (spark, path)
-    val hit = scanCache.synchronized(scanCache.get(k))
-    if (hit != null) hit
-    else {
-      // Same racing-writer protocol as GoldAggregates.readSlice: only
-      // cache the resolved scan if no invalidation landed for this
-      // path while we were listing (a stale put would pin deleted
-      // file paths until the next invalidate).
-      val gen0: Long = scanGen.getOrDefault(path, 0L)
-      val scan = spark.read.parquet(path).queryExecution.analyzed
-      scanCache.synchronized {
-        val raced = scanCache.get(k)
-        if (raced != null) raced
-        else if (scanGen.getOrDefault(path, 0L).longValue != gen0) scan
-        else {
-          scanCache.keySet().removeIf(e => e._1.sparkContext.isStopped)
-          scanCache.put(k, scan); scan
-        }
-      }
-    }
-  }
-
-  private val scanGen =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def dropScans(path: String): Unit = scanCache.synchronized {
-    scanGen.merge(path, 1L,
-      (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-    scanCache.keySet().removeIf(k => k._2 == path)
-  }
+  /** Cached analyzed scan of a registered materialization. */
+  private[plans] def scanOf(spark: SparkSession, path: String): LogicalPlan =
+    scans.get((spark, path))(spark.read.parquet(path).queryExecution.analyzed)
 
   /** Register `path` as the materialization of `defining`. Call AFTER
     * the write completes, with the defining frame analyzed under
     * `withRoutingDisabled` (so the stored key is the raw plan, not an
     * already-routed one). */
   def register(defining: DataFrame, path: String): Unit = {
-    dropScans(path) // the table was just (re)written; relist on next use
+    scans.invalidate(path) // the table was just (re)written; relist on next use
     entries.put(defining.queryExecution.analyzed.canonicalized, Entry(path))
     refreshKeyClasses()
     generation.incrementAndGet()
@@ -135,7 +97,7 @@ object GoldCatalog {
   /** Drop every registration pointing at `path` (the materialization
     * was deleted or its base data changed). */
   def invalidate(path: String): Unit = {
-    dropScans(path)
+    scans.invalidate(path)
     entries.entrySet().removeIf(e => e.getValue.path == path)
     refreshKeyClasses()
     generation.incrementAndGet()
@@ -146,7 +108,7 @@ object GoldCatalog {
     entries.values().stream().anyMatch(e => e.path == path)
 
   def clear(): Unit = {
-    entries.clear(); scanCache.clear()
+    entries.clear(); scans.clear()
     refreshKeyClasses()
     generation.incrementAndGet()
   }

@@ -429,50 +429,27 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
     * read-only input between [[refresh]] calls, the indexes are built
     * once by this instance, and keys are namespaced by [[epochId]]
     * (r16: was "refresh = new server"). */
-  private val PlanCacheMax = 512
+  private val plans = new graft.ResolvedCache[String, Served](
+    512, k => k, _ => spark)
 
-  /** Identity set of frames that can legitimately be seen again — the
-    * ones [[servePlan]] hands out (r15 ADVICE: jsonRows used to insert
-    * EVERY caller's frame into the JSON-view LRU, including live-path
-    * frames built fresh per request whose identity key can never
-    * recur — up to 1024 dead Dataset plans pinned with zero hit
-    * probability). [[jsonRows]] consults this before populating the
-    * view cache; eviction from the plan cache retires the frame here
-    * and drops its view. */
-  private val stableFrames = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]))
-
-  private val planCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean = {
-        val evict = size() > PlanCacheMax
-        if (evict) { // retire the frame's view with its plan
-          stableFrames.remove(e.getValue)
-          jsonViews.synchronized(jsonViews.remove(e.getValue)); ()
-        }
-        evict
-      }
-    })
+  /** A cached request plan and its JSON view. `df.toJSON` builds a
+    * NEW Dataset per call, whose fresh physical plan re-runs analysis
+    * AND rebuilds every broadcast — measured as most of the
+    * repeat-request cost of the join-bearing legs, because a reused
+    * plan instance's BroadcastExchange computes its relation once and
+    * serves every subsequent collect. So the view is built once, on
+    * first use, and lives (and is evicted) with its plan; executions
+    * remain fresh reads. */
+  private final class Served(val df: DataFrame) {
+    lazy val json: org.apache.spark.sql.Dataset[String] = df.toJSON
+  }
 
   /** Cache `build`'s frame under `key` (route + ordered params),
     * namespaced by the CURRENT epoch — after a [[refresh]] the same
     * request key plans afresh against the new epoch's artifacts, and
     * the retired epoch's entries age out of the LRU unconsulted. */
-  private def servePlan(key: String)(build: => DataFrame): DataFrame = {
-    val ekey = s"$epochId|$key"
-    val hit = planCache.synchronized(planCache.get(ekey))
-    if (hit != null) hit
-    else {
-      val df = build
-      planCache.synchronized {
-        val raced = planCache.get(ekey)
-        if (raced != null) raced
-        else { planCache.put(ekey, df); stableFrames.add(df); df }
-      }
-    }
-  }
+  private def servePlan(key: String)(build: => DataFrame): Served =
+    plans.get(s"$epochId|$key")(new Served(build))
 
   /** The canonical cache key of a request: route + sorted params. */
   private def planKey(route: String, p: Map[String, String]): String =
@@ -800,7 +777,7 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
   private def comprehensive(p: Map[String, String]): DataFrame = {
     val state = required(p, "state")
     val ym = required(p, "year_month")
-    servePlan(s"comprehensive|$state|$ym")(comprehensiveBuild(state, ym))
+    servePlan(s"comprehensive|$state|$ym")(comprehensiveBuild(state, ym)).df
   }
 
   private def comprehensiveBuild(state: String, ym: String): DataFrame = {
@@ -1156,53 +1133,25 @@ class RestServer(outer: SparkSession, dataDir: String, port: Int = 0) {
     ()
   }
 
-  /** Per-frame JSON view cache, keyed by the frame's REFERENCE (no
-    * equals override on Dataset — identity semantics): `df.toJSON`
-    * builds a NEW Dataset per call, whose fresh physical plan re-runs
-    * analysis AND rebuilds every broadcast — measured as most of the
-    * repeat-request cost of the join-bearing legs, because a reused
-    * plan instance's BroadcastExchange computes its relation once and
-    * serves every subsequent collect. servePlan hands out stable frame
-    * references, so the view (and its executed plan) is reused too;
-    * executions remain fresh reads. */
-  private val jsonViews = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        AnyRef, org.apache.spark.sql.Dataset[String]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[
-            AnyRef, org.apache.spark.sql.Dataset[String]]) = size() > 1024
-    })
+  private def jsonRows(df: DataFrame): Array[String] = df.toJSON.collect()
+  private def jsonRows(s: Served): Array[String] = s.json.collect()
 
-  private def jsonRows(df: DataFrame): Array[String] = {
-    val hit = jsonViews.synchronized(jsonViews.get(df))
-    val view =
-      if (hit != null) hit
-      else {
-        val v = df.toJSON
-        // only servePlan-managed frames enter the LRU: a per-request
-        // frame's identity key can never recur, so caching its view
-        // would just pin a dead plan (r15 ADVICE)
-        if (stableFrames.contains(df)) jsonViews.synchronized {
-          val raced = jsonViews.get(df)
-          if (raced != null) raced else { jsonViews.put(df, v); v }
-        } else v
-      }
-    view.collect()
-  }
-
-  /** One DataFrame → `{"count":n,"results":[...]}`. The collect is
+  /** One frame → `{"count":n,"results":[...]}`. The collect is
     * bounded: every caller limits first (or aggregates to dimension
     * grain). */
-  private def resultsJson(df: DataFrame): Response = {
-    val arr = jsonRows(df)
+  private def resultsJson(arr: Array[String]): Response =
     ok(s"""{"count":${arr.length},"results":${arr.mkString("[", ",", "]")}}""")
-  }
+  private def resultsJson(df: DataFrame): Response = resultsJson(jsonRows(df))
+  private def resultsJson(s: Served): Response = resultsJson(jsonRows(s))
 
   private def rowsJson(df: DataFrame): String =
     jsonRows(df).mkString("[", ",", "]")
+  private def rowsJson(s: Served): String = jsonRows(s).mkString("[", ",", "]")
 
   private def firstJson(df: DataFrame): String =
     jsonRows(df).headOption.getOrElse("{}")
+  private def firstJson(s: Served): String =
+    jsonRows(s).headOption.getOrElse("{}")
 }
 
 object RestServer {

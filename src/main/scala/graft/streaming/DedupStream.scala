@@ -141,21 +141,35 @@ object DedupStream {
     val totalBytes = files.map(_.getLen).sum
     val target = math.max(1L,
       (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new org.apache.hadoop.fs.Path(storePath + CompactTmpSuffix)
-    fs.delete(tmp, true)
-    spark.read.parquet(storePath).repartition(target)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(tmp.toString)
-    swapDirs(fs, p, tmp)
+    publishSwapped(spark, storePath)(tmp =>
+      spark.read.parquet(storePath).repartition(target)
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd").parquet(tmp))
     true
   }
 
-  /** The two-rename publish shared by [[compactStore]] and
-    * [[foldCounts]]: displace the live dir, promote the fresh copy,
-    * drop the displaced original. Uses the suffixes
-    * [[recoverCompaction]] heals, so a crash at any point between the
-    * renames is recovered at the next batch start. */
-  private[graft] def swapDirs(fs: org.apache.hadoop.fs.FileSystem,
+  /** Rewrite the dir at `path` atomically: `write` fills the
+    * `.compacting` side dir (cleared first), then [[swapDirs]]
+    * publishes it — or, when nothing lives at `path` yet, one rename
+    * promotes it. Readers never see a half-written dir; a crash
+    * between the renames is healed by [[recoverCompaction]]. The
+    * publish of every store rewrite: compactions, folds, dim
+    * migrations, index stats commits and layout rebuilds. */
+  private[graft] def publishSwapped(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    val (fs, p) = fsOf(spark, path)
+    val tmp = new org.apache.hadoop.fs.Path(path + CompactTmpSuffix)
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    if (!fs.exists(p)) fs.rename(tmp, p) else swapDirs(fs, p, tmp)
+  }
+
+  /** The two-rename publish behind [[publishSwapped]]: displace the
+    * live dir, promote the fresh copy, drop the displaced original.
+    * Uses the suffixes [[recoverCompaction]] heals, so a crash at any
+    * point between the renames is recovered at the next batch
+    * start. */
+  private def swapDirs(fs: org.apache.hadoop.fs.FileSystem,
                        p: org.apache.hadoop.fs.Path,
                        tmp: org.apache.hadoop.fs.Path): Unit = {
     val old = new org.apache.hadoop.fs.Path(p.toString + CompactOldSuffix)
@@ -475,12 +489,10 @@ object DedupStream {
       .filter(col("ingest_batch") =!= currentBatchId)
       .groupBy("band_idx", "band_hash").agg(sum("n").as("n"))
       .withColumn("ingest_batch", lit(-1L))
-    val tmp = new org.apache.hadoop.fs.Path(countsPath + CompactTmpSuffix)
-    fs.delete(tmp, true)
-    folded.unionByName(current)
-      .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
-      .option("compression", "zstd").parquet(tmp.toString)
-    swapDirs(fs, p, tmp)
+    publishSwapped(spark, countsPath)(tmp =>
+      folded.unionByName(current)
+        .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
+        .option("compression", "zstd").parquet(tmp))
     true
   }
 

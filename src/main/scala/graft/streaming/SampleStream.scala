@@ -19,7 +19,7 @@ import graft.operators.Curation
   * commutative-over-prefixes set operation. A replayed batch re-unions
   * the same rows with the same priorities and the fold lands on the
   * same store; batch order cannot change the result either. The store
-  * publish still uses the [[DedupStream.swapDirs]] tmp+swap (a crash
+  * publish still uses [[DedupStream.publishSwapped]]'s tmp+swap (a crash
   * mid-write must not leave a torn store), but no batch id enters the
   * state at all.
   *
@@ -60,12 +60,8 @@ object SampleStream {
         .map(c => col(s"m.rest.$c").as(c)): _*)
       .orderBy(col("priority").desc, col(keyCol))
       .limit(k)
-    val tmp = storePath + DedupStream.CompactTmpSuffix
-    folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    else DedupStream.swapDirs(fs, p, new org.apache.hadoop.fs.Path(tmp))
+    DedupStream.publishSwapped(spark, storePath)(tmp =>
+      folded.coalesce(1).write.mode("overwrite").parquet(tmp))
   }
 
   private def schemaPath(storePath: String): String =

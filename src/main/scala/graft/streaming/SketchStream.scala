@@ -82,13 +82,10 @@ object SketchStream {
       .groupBy(cellCols.head, cellCols.tail: _*)
       .agg(foldAgg(col(valueCol)).as(valueCol))
       .withColumn("ingest_batch", lit(-1L))
-    val tmp = new org.apache.hadoop.fs.Path(
-      storePath + DedupStream.CompactTmpSuffix)
-    fs.delete(tmp, true)
-    folded.unionByName(current.select(folded.columns.map(col): _*))
-      .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
-      .option("compression", "zstd").parquet(tmp.toString)
-    DedupStream.swapDirs(fs, p, tmp)
+    DedupStream.publishSwapped(spark, storePath)(tmp =>
+      folded.unionByName(current.select(folded.columns.map(col): _*))
+        .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
+        .option("compression", "zstd").parquet(tmp))
     true
   }
 
@@ -198,13 +195,10 @@ object SketchStream {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k).drop("rn")
       .withColumn("ingest_batch", lit(-1L))
-    val tmp = new org.apache.hadoop.fs.Path(
-      sketchPath + DedupStream.CompactTmpSuffix)
-    fs.delete(tmp, true)
-    folded.unionByName(current.select(folded.columns.map(col): _*))
-      .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
-      .option("compression", "zstd").parquet(tmp.toString)
-    DedupStream.swapDirs(fs, p, tmp)
+    DedupStream.publishSwapped(spark, sketchPath)(tmp =>
+      folded.unionByName(current.select(folded.columns.map(col): _*))
+        .write.mode(SaveMode.Overwrite).partitionBy("ingest_batch")
+        .option("compression", "zstd").parquet(tmp))
     true
   }
 
